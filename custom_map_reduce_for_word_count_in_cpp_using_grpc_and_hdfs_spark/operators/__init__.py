@@ -7,5 +7,6 @@
 - ``similarity`` — vector similarity search over embeddings.
 - ``text``       — language-ID, quality scoring, token counting,
   fingerprinting.
-- ``multimodal`` — binary-column plumbing with stubbed decoders.
+- ``multimodal`` — binary payload columns decoded by pure-numpy codecs
+  (image, audio, video) in Arrow-batched stages.
 """

@@ -3,15 +3,22 @@ with decode/feature-extraction as Arrow-batched ``mapInPandas`` stages.
 
 The Spark-side design: binary columns travel as ``BinaryType`` with a
 metadata struct alongside; decoding happens in ``mapInPandas`` so each
-Arrow batch is processed vectorized in Python and oversized rows never
-materialize on the driver. ``decode_image_real`` dispatches on magic
-bytes: PPM (P6) and uncompressed 24-bit BMP are decoded FOR REAL by the
-pure-numpy codecs below (header grammar, raster layout, BMP's bottom-up
-BGR padded rows); compressed formats (JPEG/PNG/video) raise
-NotImplementedError because their codec libraries are not shipped here —
-PIL/libvips/ffmpeg slot in at that seam with zero Spark-side changes.
-``fake_decode_meta`` keeps a fully-arithmetic variant whose every output
-is oracle-checkable in ANSI SQL.
+Arrow batch is processed in Python and oversized rows never
+materialize on the driver. Three mechanisms carry the whole surface:
+
+- :func:`render_payloads` — one renderer over a fixture table mapping
+  each format to ``doc_id -> payload bytes``;
+- :func:`_decode_stage` — one decode-stage adapter owning the batch
+  loop, the ``mapInPandas`` call and the ``safe`` quarantine boundary;
+  each public stage is an output column list plus a per-payload row
+  function;
+- the pure-numpy codecs (PPM, BMP, PNG, JPEG, Y4M, WAV/G.711/ADPCM,
+  FLAC, AVI) that the stages decode with.
+
+Every render and decode stage reads and writes ``doc_id long`` plus one
+``payload binary`` column. ``fake_decode_meta`` keeps a
+fully-arithmetic variant whose every output is oracle-checkable in ANSI
+SQL.
 
 At 100 TB: payloads should be read through ``spark.read.format
 ("binaryFile")`` or parquet binary columns with
@@ -31,22 +38,23 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-#: Metadata schema accompanying every payload column.
-META_FIELDS = "modality string, byte_len long, encoding string"
+#: The id and payload columns every render and decode stage shares.
+ID_COL = "doc_id"
+PAYLOAD_COL = "payload"
 
 
-def attach_payload(df: DataFrame, text_col: str = "text", modality: str = "text") -> DataFrame:
-    """Wrap a column as (payload: binary, meta: struct) — the canonical
-    multimodal row shape. Here the payload is the utf-8 encoding of the
-    text column (the container has no binary media); real pipelines load
-    bytes via binaryFile/parquet."""
-    payload = F.encode(F.col(text_col), "UTF-8")
+def attach_payload(df: DataFrame) -> DataFrame:
+    """Wrap the ``text`` column as (payload: binary, meta: struct) — the
+    canonical multimodal row shape. Here the payload is the utf-8
+    encoding of the text (the container has no binary media); real
+    pipelines load bytes via binaryFile/parquet."""
+    payload = F.encode(F.col("text"), "UTF-8")
     meta = F.struct(
-        F.lit(modality).alias("modality"),
+        F.lit("text").alias("modality"),
         F.octet_length(payload).cast("long").alias("byte_len"),
         F.lit("utf-8").alias("encoding"),
     )
-    return df.withColumn("payload", payload).withColumn("meta", meta)
+    return df.withColumn(PAYLOAD_COL, payload).withColumn("meta", meta)
 
 
 def decode_image_real(payload_bytes: bytes) -> dict:
@@ -1432,41 +1440,30 @@ def _jpeg_progressive(doc_id: int) -> bool:
     return doc_id % 40 == 0
 
 
-def render_ppm_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Fixture-image renderer: one real PPM binary per row, content a
-    deterministic function of the id (``_fixture_pixels``). mapInPandas
-    so the binary payloads are born executor-side in Arrow batches and
-    never touch the driver — the ingest shape of a real media pipeline
-    (which reads bytes via binaryFile/parquet instead of rendering)."""
-    return _render_payloads(df, encode_ppm, id_col)
+def _still_fixture(encode):
+    """Fixture renderer for a lossless still format: the arithmetic
+    fixture pixels (``_fixture_pixels``) at the fixture dimensions,
+    through ``encode(w, h, pixels)``."""
+
+    def render(doc_id: int) -> bytes:
+        w, h = _fixture_dims(doc_id)
+        return encode(w, h, _fixture_pixels(doc_id, w, h))
+
+    return render
 
 
-def render_png_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Same fixture pixels, COMPRESSED container: a real zlib-PNG per
-    row (filters cycling per row, CRC'd chunks). Decoding these proves
-    the compressed-codec path end to end with the same arithmetic
-    oracle as the PPM branch — the pixel content is identical."""
-    return _render_payloads(df, encode_png, id_col)
-
-
-def render_jpeg_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Same fixture pixels through the LOSSY transform codec: a real
-    JFIF per row (DCT + canonical-Huffman entropy coding, unit
-    quantization). Per :func:`_jpeg_subsampling`, half the docs render
-    4:2:0 (H2V2, 16x16 MCUs over the 2x2-block-constant 4:2:0 fixture)
-    and half 4:4:4; per :func:`_jpeg_progressive` a quarter render as
-    8-scan PROGRESSIVE streams — baseline and progressive, subsampled
-    and not, all decode in every run. Verified via
-    :func:`decode_jpeg_check`'s in-plan error bound rather than exact
-    sums — JPEG loses by design."""
-
-    def enc(w: int, h: int, px: np.ndarray, doc_id: int) -> bytes:
-        sub = _jpeg_subsampling(doc_id)
-        if sub == "420":
-            px = _fixture_pixels_420(doc_id, w, h)
-        return encode_jpeg(w, h, px, subsampling=sub, progressive=_jpeg_progressive(doc_id))
-
-    return _render_payloads(df, enc, id_col, pass_id=True)
+def _jpeg_fixture(doc_id: int) -> bytes:
+    """The fixture pixels through the LOSSY transform codec: a real JFIF
+    (DCT + canonical-Huffman entropy coding, unit quantization). Per
+    :func:`_jpeg_subsampling`, half the docs render 4:2:0 (H2V2, 16x16
+    MCUs over the 2x2-block-constant 4:2:0 fixture) and half 4:4:4; per
+    :func:`_jpeg_progressive` a quarter render as 8-scan PROGRESSIVE
+    streams. Verified via :func:`decode_jpeg_check`'s in-plan error
+    bound rather than exact sums — JPEG loses by design."""
+    w, h = _fixture_dims(doc_id)
+    sub = _jpeg_subsampling(doc_id)
+    px = (_fixture_pixels_420 if sub == "420" else _fixture_pixels)(doc_id, w, h)
+    return encode_jpeg(w, h, px, subsampling=sub, progressive=_jpeg_progressive(doc_id))
 
 
 def encode_arithmetic_stub(width: int, height: int, pixels: np.ndarray) -> bytes:
@@ -1487,35 +1484,33 @@ def encode_arithmetic_stub(width: int, height: int, pixels: np.ndarray) -> bytes
 
 
 #: Quarantine-fixture rule over the doc_id % 10 == 0 slice: which planted
-#: failure each doc carries (see render_quarantine_payloads).
+#: failure each doc carries (see _quarantine_fixture).
 _QUARANTINE_TRUNCATED = 0  # doc_id % 100 — PPM cut to 10 bytes -> ValueError
 _QUARANTINE_ARITHMETIC = 30  # SOF9 stream -> NotImplementedError
 _QUARANTINE_UNKNOWN = 60  # unknown magic (video-ish) -> NotImplementedError
 
 
-def render_quarantine_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Fixture renderer for the safe-decode (quarantine) path: good PPM
-    payloads with three deterministic failure classes planted among them
-    by doc_id arithmetic — a truncated PPM (corrupt stream), an
+def _quarantine_fixture(doc_id: int) -> bytes:
+    """Fixture for the safe-decode (quarantine) path: good PPM payloads
+    with three deterministic failure classes planted among them by
+    doc_id arithmetic — a truncated PPM (corrupt stream), an
     arithmetic-coded JPEG (unsupported-but-real format), and an
     unknown-magic payload (video container). Every class a 100 TB ingest
     actually hits, planted IN the same batch as good rows so the test
     proves bad payloads don't poison their neighbors."""
-
-    def enc(w: int, h: int, px: np.ndarray, doc_id: int) -> bytes:
-        m = doc_id % 100
-        if m == _QUARANTINE_TRUNCATED:
-            return encode_ppm(w, h, px)[:10]
-        if m == _QUARANTINE_ARITHMETIC:
-            return encode_arithmetic_stub(w, h, px)
-        if m == _QUARANTINE_UNKNOWN:
-            return b"MOOVftypisom" + bytes(16)
-        return encode_ppm(w, h, px)
-
-    return _render_payloads(df, enc, id_col, pass_id=True)
+    w, h = _fixture_dims(doc_id)
+    px = _fixture_pixels(doc_id, w, h)
+    m = doc_id % 100
+    if m == _QUARANTINE_TRUNCATED:
+        return encode_ppm(w, h, px)[:10]
+    if m == _QUARANTINE_ARITHMETIC:
+        return encode_arithmetic_stub(w, h, px)
+    if m == _QUARANTINE_UNKNOWN:
+        return b"MOOVftypisom" + bytes(16)
+    return encode_ppm(w, h, px)
 
 
-def decode_jpeg_check(df: DataFrame, id_col: str = "doc_id", img_col: str = "img") -> DataFrame:
+def decode_jpeg_check(df: DataFrame) -> DataFrame:
     """Decode each JPEG payload and verify it against the arithmetic
     reference pixels IN-PLAN: emits (doc_id, width, height, decode_ok)
     where decode_ok = max per-channel |decoded - reference| <=
@@ -1523,40 +1518,16 @@ def decode_jpeg_check(df: DataFrame, id_col: str = "doc_id", img_col: str = "img
     executor batch (the same _fixture_pixels the render stage used), so
     the oracle only has to assert TRUE — the established recall-invariant
     pattern for results a SQL engine cannot reproduce bit-for-bit."""
-    schema = f"{id_col} long, width long, height long, decode_ok boolean"
 
-    def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col].astype("int64"), pdf[img_col]):
-                w, h, _, px = decode_jpeg(bytes(payload))
-                ref_fn = (
-                    _fixture_pixels_420
-                    if _jpeg_subsampling(int(doc_id)) == "420"
-                    else _fixture_pixels
-                )
-                ref = ref_fn(int(doc_id), w, h).astype(np.int64)
-                err = int(np.abs(px.astype(np.int64) - ref).max())
-                rows.append((doc_id, w, h, bool(err <= JPEG_TOLERANCE)))
-            yield pd.DataFrame(rows, columns=[id_col, "width", "height", "decode_ok"])
+    def row(doc_id, data: bytes, decoded) -> tuple:
+        w, h, _, px = decoded
+        ref_fn = _fixture_pixels_420 if _jpeg_subsampling(int(doc_id)) == "420" else _fixture_pixels
+        return w, h, bool(_max_err(px, ref_fn(int(doc_id), w, h)) <= JPEG_TOLERANCE)
 
-    return df.select(id_col, img_col).mapInPandas(check, schema)
+    return _decode_stage(df, "width long, height long, decode_ok boolean", decode_jpeg, row)
 
 
-def _render_payloads(df: DataFrame, encoder, id_col: str, pass_id: bool = False) -> DataFrame:
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            imgs = []
-            for doc_id in pdf[id_col].astype("int64"):
-                w, h = _fixture_dims(doc_id)
-                px = _fixture_pixels(doc_id, w, h)
-                imgs.append(encoder(w, h, px, int(doc_id)) if pass_id else encoder(w, h, px))
-            yield pd.DataFrame({id_col: pdf[id_col], "img": imgs})
-
-    return df.select(id_col).mapInPandas(render, f"{id_col} long, img binary")
-
-
-def stage_ppm_ingest_dir(docs: DataFrame, path: str, id_col: str = "doc_id") -> str:
+def stage_ppm_ingest_dir(docs: DataFrame, path: str) -> str:
     """Materialize a directory of REAL ``.ppm`` files, one per input row
     (payload = the deterministic fixture image for the id), written
     executor-side via ``foreachPartition`` so the bytes never cross the
@@ -1566,9 +1537,9 @@ def stage_ppm_ingest_dir(docs: DataFrame, path: str, id_col: str = "doc_id") -> 
 
     Idempotent per (path, doc-id SET): the marker file is keyed by the
     id MULTISET's count + order-insensitive xxhash64 xor-fold + decimal
-    hash sum (ADVICE r7 fix — a
-    count-only key wrongly skipped a same-count-but-different id set and
-    left stale ``.ppm`` files behind when the set shrank), computed with
+    hash sum (a count-only key would wrongly skip a same-count but
+    different id set and leave stale ``.ppm`` files behind when the set
+    shrank), computed with
     one tiny 1-row aggregate, never a driver collect of the ids. On a
     key change, stale payloads and old markers are cleared BEFORE
     re-staging so the ``*.ppm`` glob can never pick up files from a
@@ -1585,9 +1556,9 @@ def stage_ppm_ingest_dir(docs: DataFrame, path: str, id_col: str = "doc_id") -> 
     # agree; decimal(38,0) so the sum never overflows under ANSI mode
     key = docs.agg(
         F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.expr(f"bit_xor(xxhash64({id_col}))"), F.lit(0)).alias("h"),
+        F.coalesce(F.expr(f"bit_xor(xxhash64({ID_COL}))"), F.lit(0)).alias("h"),
         F.coalesce(
-            F.expr(f"sum(cast(xxhash64({id_col}) as decimal(38, 0)))"),
+            F.expr(f"sum(cast(xxhash64({ID_COL}) as decimal(38, 0)))"),
             F.lit(0).cast("decimal(38, 0)"),
         ).alias("s"),
     ).collect()[0]
@@ -1601,18 +1572,17 @@ def stage_ppm_ingest_dir(docs: DataFrame, path: str, id_col: str = "doc_id") -> 
     for name in os.listdir(path):  # clear stale payloads + old markers
         if name.endswith(".ppm") or name.endswith(".ppm.tmp") or name.startswith("_STAGED_"):
             os.remove(os.path.join(path, name))
+    render = _FIXTURES["ppm"]
 
     def write_part(rows) -> None:
         for r in rows:
             doc_id = int(r[0])
-            w, h = _fixture_dims(doc_id)
-            payload = encode_ppm(w, h, _fixture_pixels(doc_id, w, h))
             tmp = os.path.join(path, f".{doc_id}.ppm.tmp")
             with open(tmp, "wb") as f:
-                f.write(payload)
+                f.write(render(doc_id))
             os.replace(tmp, os.path.join(path, f"{doc_id}.ppm"))
 
-    docs.select(id_col).foreachPartition(write_part)
+    docs.select(ID_COL).foreachPartition(write_part)
     open(marker, "w").close()
     return path
 
@@ -1622,96 +1592,110 @@ def stage_ppm_ingest_dir(docs: DataFrame, path: str, id_col: str = "doc_id") -> 
 _QUARANTINE_ERR_LEN = 200
 
 
-def decode_image_stats(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    img_col: str = "img",
-    safe: bool = False,
-    decode_backend: str = "native",
-) -> DataFrame:
+def _decode_stage(df: DataFrame, cols: str, decode, row, safe: bool = False) -> DataFrame:
+    """The one decode-stage adapter. Per payload it runs
+    ``decode(payload bytes)`` and then ``row(doc_id, payload bytes,
+    decoded) -> tuple`` and emits ``doc_id`` plus the tuple, typed by
+    ``cols`` (a DDL column list), over Arrow batches in one
+    ``mapInPandas``. ``decode`` is resolved on the driver when the stage
+    is built, so a backend choice (or a missing library) is settled
+    before any executor runs.
+
+    ``safe=True`` is the quarantine boundary (the 100 TB ingest
+    posture): a payload whose decode raises becomes a row with null
+    features, ``status='quarantined:<ExceptionType>'`` and the error
+    message truncated to ``_QUARANTINE_ERR_LEN``, instead of raising
+    inside ``mapInPandas`` — where one bad file among billions fails the
+    task, its retries, and then the whole job. Decoded rows carry
+    ``status='ok'``, ``error=NULL`` and features identical to
+    ``safe=False``. An ``ImportError`` is never quarantined: a decode
+    library missing on an executor is an environment defect, not a
+    payload defect, and would otherwise tag every row
+    ``quarantined:ImportError``; it fails the task loudly in both
+    modes. ``safe=False`` keeps the strict posture for fixture pipelines
+    where an undecodable payload IS the bug."""
+    names = [ID_COL] + [c.split()[0] for c in cols.split(",")]
+    schema = f"{ID_COL} long, {cols}"
+    nulls = (None,) * (len(names) - 1)
+    if safe:
+        names += ["status", "error"]
+        schema += ", status string, error string"
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for doc_id, payload in zip(pdf[ID_COL], pdf[PAYLOAD_COL]):
+                data = bytes(payload)
+                try:
+                    decoded = decode(data)
+                except ImportError:
+                    raise  # an environment defect, not a payload defect
+                except Exception as exc:  # noqa: BLE001 — quarantine boundary
+                    if not safe:
+                        raise
+                    err = (f"quarantined:{type(exc).__name__}", str(exc)[:_QUARANTINE_ERR_LEN])
+                    rows.append((doc_id, *nulls, *err))
+                    continue
+                rows.append((doc_id, *row(doc_id, data, decoded), *(("ok", None) if safe else ())))
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.select(ID_COL, PAYLOAD_COL).mapInPandas(run, schema)
+
+
+def _rgb_sums(px: np.ndarray) -> tuple[int, int, int, int]:
+    """(total, r, g, b) sums over an (..., 3) raster, as exact ints."""
+    px = px.astype(np.int64)
+    return int(px.sum()), int(px[..., 0].sum()), int(px[..., 1].sum()), int(px[..., 2].sum())
+
+
+def _max_err(decoded: np.ndarray, ref: np.ndarray) -> int:
+    """Max |decoded - reference| — the bounded-error invariant of the
+    lossy stages."""
+    return int(np.abs(decoded.astype(np.int64) - ref.astype(np.int64)).max())
+
+
+def _sampled_frames(n_frames: int) -> str:
+    """The kept frame indices (every FRAME_STRIDE-th) as 'i,j,...'."""
+    return ",".join(str(i) for i in range(0, n_frames, FRAME_STRIDE))
+
+
+_SUM_COLS = "pixel_sum long, r_sum long, g_sum long, b_sum long"
+_IMAGE_COLS = "width long, height long, maxval long, " + _SUM_COLS
+
+
+def decode_image_stats(df: DataFrame, safe: bool = False, decode_backend: str = "native") -> DataFrame:
     """REAL decode stage: parse each binary payload with
     :func:`decode_image_real` (PPM/BMP/PNG/JPEG numpy codecs) and emit
     per-image stats — dimensions plus whole-image and per-channel pixel
     sums. The stats are pure functions of the decoded raster, so any
     header mis-parse, row-padding slip, or channel-order bug shows up as
-    a value mismatch against the arithmetic oracle.
-
-    ``safe=True`` (round 8 — the 100 TB ingest posture): decode each
-    payload under try/except. Undecodable payloads (arithmetic-coded
-    JPEG, video, truncated/corrupt streams, unknown magic) become rows with
-    null stats, ``status='quarantined:<ExceptionType>'`` and the error
-    message, instead of raising inside ``mapInPandas`` — where one bad
-    file among billions fails the task, its 3 retries, and then the
-    whole job. Decoded rows carry ``status='ok'``, ``error=NULL`` and
-    stats identical to the ``safe=False`` path. Route quarantined rows
-    to a side sink (``.where("status <> 'ok'")``) for offline triage —
-    they keep their ``doc_id`` so the source payload is recoverable.
-    ``safe=False`` keeps the strict posture for fixture pipelines where
-    an undecodable payload IS the bug and must fail loudly.
+    a value mismatch against the arithmetic oracle. ``safe`` is the
+    :func:`_decode_stage` quarantine boundary; route quarantined rows to
+    a side sink (``.where("status <> 'ok'")``) for offline triage — they
+    keep their ``doc_id`` so the source payload is recoverable.
 
     ``decode_backend``: 'native' (default — the numpy codecs, zero
     dependencies), 'pillow' (the production adapter
     :func:`decode_image_pillow`; validated on the driver at build time
     so a missing library fails loudly, not as a sea of quarantine
-    rows), or 'auto' (round 13 — the cost-aware route: entropy-coded
-    classes go to the adapter where it imports, per the pinned
-    throughput crossover in :func:`decide_decode_backend`; the 100 TB
-    ingest default for image-heavy corpora). All backends share this
-    function's schema, Arrow batching and quarantine semantics
-    unchanged."""
-    decode_fn = _resolve_decode_backend(decode_backend)
-    schema = (
-        f"{id_col} long, width long, height long, maxval long, "
-        "pixel_sum long, r_sum long, g_sum long, b_sum long"
-    )
-    if safe:
-        schema += ", status string, error string"
+    rows), or 'auto' (the cost-aware route: entropy-coded classes go to
+    the adapter where it imports, per the pinned throughput crossover in
+    :func:`decide_decode_backend`; the 100 TB ingest default for
+    image-heavy corpora). All backends share this function's schema,
+    Arrow batching and quarantine semantics unchanged."""
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [id_col, "width", "height", "maxval", "pixel_sum", "r_sum", "g_sum", "b_sum"]
-        if safe:
-            cols += ["status", "error"]
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[img_col]):
-                try:
-                    d = decode_fn(bytes(payload))
-                except ImportError:
-                    # NEVER quarantine a missing decode library (ADVICE
-                    # r9): _resolve_decode_backend validates on the
-                    # DRIVER only — an executor missing Pillow would
-                    # otherwise tag every row 'quarantined:ImportError',
-                    # the exact silent mass-failure the eager check
-                    # exists to prevent. An environment defect is not a
-                    # payload defect; fail the task loudly.
-                    raise
-                except Exception as exc:  # noqa: BLE001 — quarantine boundary
-                    if not safe:
-                        raise
-                    rows.append(
-                        (doc_id,) + (None,) * 7
-                        + (f"quarantined:{type(exc).__name__}", str(exc)[:_QUARANTINE_ERR_LEN])
-                    )
-                    continue
-                px = d["pixels"].astype(np.int64)
-                row = (
-                    doc_id,
-                    d["width"],
-                    d["height"],
-                    d["maxval"],
-                    int(px.sum()),
-                    int(px[:, :, 0].sum()),
-                    int(px[:, :, 1].sum()),
-                    int(px[:, :, 2].sum()),
-                )
-                rows.append(row + ("ok", None) if safe else row)
-            yield pd.DataFrame(rows, columns=cols)
+    def row(doc_id, data: bytes, d: dict) -> tuple:
+        return d["width"], d["height"], d["maxval"], *_rgb_sums(d["pixels"])
 
-    return df.select(id_col, img_col).mapInPandas(decode, schema)
+    return _decode_stage(df, _IMAGE_COLS, _resolve_decode_backend(decode_backend), row, safe)
 
 
-#: Resize target box (the usual vision-model input side).
+#: Resize target box (the usual vision-model input side) of the
+#: arithmetic stand-in in :func:`fake_decode_meta`.
 RESIZE_BOX = 224
+#: Box of the real resize stage: small so the oracle's per-output-pixel
+#: expansion stays bounded (the NN kernel is box-size-independent).
+STAGE_RESIZE_BOX = 8
 #: Keep every k-th frame when sampling.
 FRAME_STRIDE = 2
 
@@ -1740,47 +1724,21 @@ def resize_nn(px: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
     return px[ys][:, xs]
 
 
-def resized_image_stats(
-    df: DataFrame, id_col: str = "doc_id", img_col: str = "img", box: int = RESIZE_BOX
-) -> DataFrame:
-    """REAL resize stage (round 9 — previously only the arithmetic
-    stand-in in :func:`fake_decode_meta` exercised the resize step):
-    decode each payload (:func:`decode_image_real`), nearest-neighbor
-    resize into an aspect-preserving ``box`` fit (:func:`resize_nn`,
-    no upscaling), and emit the RESIZED raster's dimensions and
+def resized_image_stats(df: DataFrame) -> DataFrame:
+    """REAL resize stage: decode each payload
+    (:func:`decode_image_real`), nearest-neighbor resize into an
+    aspect-preserving ``STAGE_RESIZE_BOX`` fit (:func:`resize_nn`, no
+    upscaling), and emit the RESIZED raster's dimensions and
     whole/per-channel pixel sums. Because NN resampling is pure index
     arithmetic, the sums are exactly SQL-derivable — the resize KERNEL
     itself is oracle-checked, not just the plumbing around it."""
-    schema = (
-        f"{id_col} long, width long, height long, resized_w long, resized_h long, "
-        "pixel_sum long, r_sum long, g_sum long, b_sum long"
-    )
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [id_col, "width", "height", "resized_w", "resized_h",
-                "pixel_sum", "r_sum", "g_sum", "b_sum"]
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[img_col]):
-                d = decode_image_real(bytes(payload))
-                ow, oh = resize_fit(d["width"], d["height"], box)
-                out = resize_nn(d["pixels"], ow, oh).astype(np.int64)
-                rows.append(
-                    (
-                        doc_id,
-                        d["width"],
-                        d["height"],
-                        ow,
-                        oh,
-                        int(out.sum()),
-                        int(out[:, :, 0].sum()),
-                        int(out[:, :, 1].sum()),
-                        int(out[:, :, 2].sum()),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
+    def row(doc_id, data: bytes, d: dict) -> tuple:
+        ow, oh = resize_fit(d["width"], d["height"], STAGE_RESIZE_BOX)
+        return d["width"], d["height"], ow, oh, *_rgb_sums(resize_nn(d["pixels"], ow, oh))
 
-    return df.select(id_col, img_col).mapInPandas(decode, schema)
+    cols = "width long, height long, resized_w long, resized_h long, " + _SUM_COLS
+    return _decode_stage(df, cols, decode_image_real, row)
 
 
 def quarantine_summary(stats: DataFrame) -> DataFrame:
@@ -2081,129 +2039,73 @@ def _wav_fixture_samples(doc_id: int, ch: int, n: int) -> np.ndarray:
     return (((13 * doc_id + 29 * i) % 4096) - 2048).astype(np.int16).reshape(n, ch)
 
 
-def render_wav_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Fixture-audio renderer: one real WAV per row, executor-side."""
+def _audio_fixture(encode, samples=_wav_fixture_samples):
+    """Fixture renderer for an audio container: the WAV fixture geometry
+    (``_wav_fixture_geom``) and ``samples`` generator through
+    ``encode(rate, samples)``."""
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            wavs = []
-            for doc_id in pdf[id_col].astype("int64"):
-                rate, ch, n = _wav_fixture_geom(int(doc_id))
-                wavs.append(encode_wav(rate, _wav_fixture_samples(int(doc_id), ch, n)))
-            yield pd.DataFrame({id_col: pdf[id_col], "audio": wavs})
+    def render(doc_id: int) -> bytes:
+        rate, ch, n = _wav_fixture_geom(doc_id)
+        return encode(rate, samples(doc_id, ch, n))
 
-    return df.select(id_col).mapInPandas(render, f"{id_col} long, audio binary")
+    return render
 
 
 def _pcm_variant(doc_id: int) -> int:
-    """PCM container variant for the widened audio_wav fixture (round
-    11): over the 1-in-10 sampled docs, (doc_id // 10) % 4 cycles
+    """PCM container variant for the widened audio_wav fixture: over
+    the 1-in-10 sampled docs, (doc_id // 10) % 4 cycles
     0=canonical s16, 1=WAVE_FORMAT_EXTENSIBLE s16, 2=24-bit (low byte
     zero — decodes bit-exact), 3=unsigned 8-bit (decodes to the
     floor-256 quantization (v>>8)<<8, which the oracle re-renders)."""
     return (doc_id // 10) % 4
 
 
-def render_pcm_variant_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Fixture renderer cycling all four natively-decoded PCM containers
-    by doc arithmetic — same samples and geometry as
-    :func:`render_wav_payloads`, four real on-disk layouts."""
-    encoders = [encode_wav, encode_wav_extensible, encode_wav_s24, encode_wav_u8]
-
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            wavs = []
-            for doc_id in pdf[id_col].astype("int64"):
-                rate, ch, n = _wav_fixture_geom(int(doc_id))
-                enc = encoders[_pcm_variant(int(doc_id))]
-                wavs.append(enc(rate, _wav_fixture_samples(int(doc_id), ch, n)))
-            yield pd.DataFrame({id_col: pdf[id_col], "audio": wavs})
-
-    return df.select(id_col).mapInPandas(render, f"{id_col} long, audio binary")
+def _pcm_variant_fixture(doc_id: int) -> bytes:
+    """Cycles all four natively-decoded PCM containers by doc arithmetic
+    — same samples and geometry as the ``wav`` fixture, four real
+    on-disk layouts."""
+    encode = (encode_wav, encode_wav_extensible, encode_wav_s24, encode_wav_u8)[_pcm_variant(doc_id)]
+    return _audio_fixture(encode)(doc_id)
 
 
-def audio_features(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    audio_col: str = "audio",
-    safe: bool = False,
-    decode_backend: str = "native",
-) -> DataFrame:
-    """REAL audio decode + feature stage: parse each WAV
-    (:func:`decode_wav`) and emit per-document features — exact
-    container byte length, sample rate, channel/sample counts, exact
-    integer duration in µs, per-channel sample sums (first two
-    channels) and the whole-stream L1 energy (sum of |sample|). All
-    integers, all pure functions of the container bytes — a chunk-walk
-    slip, endianness bug, or de-interleave error is a value mismatch
-    against the arithmetic oracle. Same mapInPandas plumbing as the
-    image/video stages; a compressed-audio pipeline swaps decode_wav
-    for libsndfile/ffmpeg inside the same iterator.
+_AUDIO_COLS = "byte_len long, sample_rate long, n_channels long, n_samples long, duration_us long"
 
-    ``safe=True``: the same quarantine contract as
-    :func:`decode_image_stats` — undecodable payloads become rows with
-    null features, ``status='quarantined:<ExceptionType>'`` and the
-    error string, instead of failing the task (and its retries, and the
-    job) on one corrupt file among billions; decoded rows carry
-    ``status='ok'`` and features identical to strict mode. Feed the
-    output to :func:`quarantine_summary` for the rate rollup.
 
-    ``decode_backend``: 'native' (the zero-dependency RIFF parser —
-    PCM s16le, G.711 A-law/µ-law, and since round 11 IEEE-float and
-    IMA-ADPCM) or 'ffmpeg' (:func:`decode_audio_ffmpeg` — the
-    production adapter whose exclusive territory is ENTROPY-coded
-    audio: MP3/AAC; on the overlapping formats it
-    cross-checks the native decoder bit-for-bit; validated eagerly on
-    the driver, ImportError re-raised through the quarantine boundary
-    executor-side). Both share this schema, batching and quarantine
-    semantics (round 10 — the Pillow-adapter pattern at the audio
-    seam)."""
-    decode_fn = _resolve_audio_backend(decode_backend)
-    schema = (
-        f"{id_col} long, byte_len long, sample_rate long, n_channels long, "
-        "n_samples long, duration_us long, ch0_sum long, ch1_sum long, abs_sum long"
-    )
-    if safe:
-        schema += ", status string, error string"
+def _audio_geom(data: bytes, rate: int, samples: np.ndarray) -> tuple:
+    """The exact container geometry of the audio stages' rows."""
+    n, ch = samples.shape
+    return len(data), rate, ch, n, n * 1_000_000 // rate
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [id_col, "byte_len", "sample_rate", "n_channels", "n_samples",
-                "duration_us", "ch0_sum", "ch1_sum", "abs_sum"]
-        if safe:
-            cols += ["status", "error"]
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[audio_col]):
-                data = bytes(payload)
-                try:
-                    rate, samples = decode_fn(data)
-                except ImportError:
-                    raise  # environment defect, not a payload defect (ADVICE r9)
-                except Exception as exc:  # noqa: BLE001 — quarantine boundary
-                    if not safe:
-                        raise
-                    rows.append(
-                        (doc_id,) + (None,) * 8
-                        + (f"quarantined:{type(exc).__name__}", str(exc)[:_QUARANTINE_ERR_LEN])
-                    )
-                    continue
-                n, ch = samples.shape
-                s64 = samples.astype(np.int64)
-                row = (
-                    doc_id,
-                    len(data),
-                    rate,
-                    ch,
-                    n,
-                    n * 1_000_000 // rate,
-                    int(s64[:, 0].sum()),
-                    int(s64[:, 1].sum()) if ch > 1 else None,
-                    int(np.abs(s64).sum()),
-                )
-                rows.append(row + ("ok", None) if safe else row)
-            yield pd.DataFrame(rows, columns=cols)
 
-    return df.select(id_col, audio_col).mapInPandas(decode, schema)
+def audio_features(df: DataFrame, safe: bool = False, decode_backend: str = "native") -> DataFrame:
+    """REAL audio decode + feature stage: parse each container and emit
+    per-document features — exact container byte length, sample rate,
+    channel/sample counts, exact integer duration in µs, per-channel
+    sample sums (first two channels) and the whole-stream L1 energy (sum
+    of |sample|). All integers, all pure functions of the container
+    bytes — a chunk-walk slip, endianness bug, or de-interleave error is
+    a value mismatch against the arithmetic oracle. ``safe`` is the
+    :func:`_decode_stage` quarantine boundary; feed its output to
+    :func:`quarantine_summary` for the rate rollup.
+
+    ``decode_backend``: 'native' (:func:`decode_audio_native` — the
+    zero-dependency RIFF parser for PCM s16le, G.711 A-law/µ-law,
+    IEEE-float and IMA-ADPCM, plus FLAC), 'ffmpeg'
+    (:func:`decode_audio_ffmpeg` — the production adapter whose
+    exclusive territory is PERCEPTUAL audio: MP3/AAC; on the
+    overlapping formats it cross-checks the native decoder bit-for-bit;
+    validated eagerly on the driver) or 'auto' (the cost-seam route of
+    :func:`_resolve_audio_backend`). All share this schema, batching and
+    quarantine semantics."""
+
+    def row(doc_id, data: bytes, decoded) -> tuple:
+        rate, samples = decoded
+        s64 = samples.astype(np.int64)
+        ch1 = int(s64[:, 1].sum()) if samples.shape[1] > 1 else None
+        return *_audio_geom(data, rate, samples), int(s64[:, 0].sum()), ch1, int(np.abs(s64).sum())
+
+    cols = _AUDIO_COLS + ", ch0_sum long, ch1_sum long, abs_sum long"
+    return _decode_stage(df, cols, _resolve_audio_backend(decode_backend), row, safe)
 
 
 def _y4m_fixture_geom(doc_id: int) -> tuple[int, int, int]:
@@ -2225,91 +2127,44 @@ def _y4m_fixture_frames(doc_id: int, w: int, h: int, n: int) -> np.ndarray:
     return ((11 * doc_id + 17 * f + 23 * p + 31 * i) % 256).astype(np.uint8)
 
 
-def render_y4m_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Fixture-video renderer: one real Y4M container per row, geometry
-    and plane bytes deterministic functions of the id — executor-side
-    Arrow batches, same ingest shape as the image renderers."""
-
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vids = []
-            for doc_id in pdf[id_col].astype("int64"):
-                w, h, n = _y4m_fixture_geom(int(doc_id))
-                vids.append(encode_y4m(w, h, _y4m_fixture_frames(int(doc_id), w, h, n)))
-            yield pd.DataFrame({id_col: pdf[id_col], "video": vids})
-
-    return df.select(id_col).mapInPandas(render, f"{id_col} long, video binary")
+def _y4m_fixture(doc_id: int) -> bytes:
+    """One real Y4M container: geometry and plane bytes deterministic
+    functions of the id."""
+    w, h, n = _y4m_fixture_geom(doc_id)
+    return encode_y4m(w, h, _y4m_fixture_frames(doc_id, w, h, n))
 
 
-def video_frame_stats(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    vid_col: str = "video",
-    stride: int = FRAME_STRIDE,
-    safe: bool = False,
-) -> DataFrame:
+_FRAME_COLS = "byte_len long, width long, height long, n_frames long, sampled_frames string"
+
+
+def _frame_geom(data: bytes, w: int, h: int, frames: np.ndarray) -> tuple:
+    """The exact container geometry of the video stages' rows."""
+    return len(data), w, h, len(frames), _sampled_frames(len(frames))
+
+
+def video_frame_stats(df: DataFrame, safe: bool = False) -> DataFrame:
     """REAL video decode + frame-sample stage: parse each Y4M container
-    (:func:`decode_y4m`), keep every ``stride``-th frame, and emit one
-    row per document — exact container byte length, dimensions, total
-    frame count, the sampled frame indices, and per-plane (Y/Cb/Cr)
-    byte sums over the SAMPLED frames. Sums are pure functions of the
-    container bytes, so a header mis-parse, frame mis-split, or plane
-    offset slip is a value mismatch against the arithmetic oracle.
-    Same Arrow/mapInPandas plumbing as :func:`decode_image_stats`; a
-    compressed-video pipeline swaps :func:`decode_y4m` for an ffmpeg
-    adapter inside the same batch iterator.
+    (:func:`decode_y4m`), keep every ``FRAME_STRIDE``-th frame, and emit
+    one row per document — exact container byte length, dimensions,
+    total frame count, the sampled frame indices, and per-plane
+    (Y/Cb/Cr) byte sums over the SAMPLED frames. Sums are pure functions
+    of the container bytes, so a header mis-parse, frame mis-split, or
+    plane offset slip is a value mismatch against the arithmetic oracle.
+    ``safe`` is the :func:`_decode_stage` quarantine boundary
+    (chroma-subsampled Y4M, truncated frames and unknown magic become
+    status rows); a compressed-video pipeline swaps :func:`decode_y4m`
+    for an ffmpeg adapter."""
 
-    ``safe=True``: the decode_image_stats quarantine contract —
-    undecodable containers (chroma-subsampled Y4M, truncated frames,
-    unknown magic) become null-feature rows tagged
-    ``status='quarantined:<ExceptionType>'`` + the error string instead
-    of killing the stage; good rows carry ``status='ok'`` and features
-    identical to strict mode. Feed to :func:`quarantine_summary`."""
-    schema = (
-        f"{id_col} long, byte_len long, width long, height long, n_frames long, "
-        "sampled_frames string, y_sum long, cb_sum long, cr_sum long"
-    )
-    if safe:
-        schema += ", status string, error string"
+    def row(doc_id, data: bytes, decoded) -> tuple:
+        w, h, frames = decoded
+        kept = frames[::FRAME_STRIDE].astype(np.int64)
+        return *_frame_geom(data, w, h, frames), *(int(kept[:, p].sum()) for p in range(3))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [id_col, "byte_len", "width", "height", "n_frames",
-                "sampled_frames", "y_sum", "cb_sum", "cr_sum"]
-        if safe:
-            cols += ["status", "error"]
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[vid_col]):
-                data = bytes(payload)
-                try:
-                    w, h, frames = decode_y4m(data)
-                except Exception as exc:  # noqa: BLE001 — quarantine boundary
-                    if not safe:
-                        raise
-                    rows.append(
-                        (doc_id,) + (None,) * 8
-                        + (f"quarantined:{type(exc).__name__}", str(exc)[:_QUARANTINE_ERR_LEN])
-                    )
-                    continue
-                kept = frames[::stride].astype(np.int64)
-                row = (
-                    doc_id,
-                    len(data),
-                    w,
-                    h,
-                    len(frames),
-                    ",".join(str(i) for i in range(0, len(frames), stride)),
-                    int(kept[:, 0].sum()),
-                    int(kept[:, 1].sum()),
-                    int(kept[:, 2].sum()),
-                )
-                rows.append(row + ("ok", None) if safe else row)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select(id_col, vid_col).mapInPandas(decode, schema)
+    cols = _FRAME_COLS + ", y_sum long, cb_sum long, cr_sum long"
+    return _decode_stage(df, cols, decode_y4m, row, safe)
 
 
-def fake_decode_meta(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def fake_decode_meta(df: DataFrame) -> DataFrame:
     """Deterministic stand-in decoder + the downstream feature stages a
     media pipeline runs, all via mapInPandas over Arrow batches:
 
@@ -2327,33 +2182,31 @@ def fake_decode_meta(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     schema, Arrow batching, partitioning — is identical.
     """
     schema = (
-        f"{id_col} long, byte_len long, width long, height long, n_frames long, "
+        f"{ID_COL} long, byte_len long, width long, height long, n_frames long, "
         f"resized_w long, resized_h long, sampled_frames string"
     )
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            n = pdf["payload"].map(len)
+            n = pdf[PAYLOAD_COL].map(len)
             w = 64 + n % 193
             h = 64 + n % 149
             frames = 1 + n % 7
             longest = pd.concat([w, h], axis=1).max(axis=1)
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col],
+                    ID_COL: pdf[ID_COL],
                     "byte_len": n,
                     "width": w,
                     "height": h,
                     "n_frames": frames,
                     "resized_w": (w * RESIZE_BOX) // longest,
                     "resized_h": (h * RESIZE_BOX) // longest,
-                    "sampled_frames": frames.map(
-                        lambda k: ",".join(str(i) for i in range(0, k, FRAME_STRIDE))
-                    ),
+                    "sampled_frames": frames.map(_sampled_frames),
                 }
             )
 
-    return df.select(id_col, "payload").mapInPandas(decode, schema)
+    return df.select(ID_COL, PAYLOAD_COL).mapInPandas(decode, schema)
 
 
 # --------------------------------------------------------------------------
@@ -2549,12 +2402,6 @@ def decode_avi_mjpeg(payload: bytes) -> tuple[int, int, np.ndarray]:
     return width, height, np.stack(frames)
 
 
-#: The AVI decoder handles every layout the container can carry without
-#: an inter-frame entropy codec; alias the dispatching name for callers
-#: reading it as the general container entry point.
-decode_avi = decode_avi_mjpeg
-
-
 def _mjpeg_fixture_geom(doc_id: int) -> tuple[int, int, int]:
     """(width, height, n_frames): the JPEG fixture dims (so block
     padding paths match the still-image branch) with the Y4M frame-count
@@ -2571,170 +2418,67 @@ def _mjpeg_fixture_frame(doc_id: int, f: int, w: int, h: int) -> np.ndarray:
     return ((7 * doc_id + 17 * f + 31 * i) % 256).astype(np.uint8).reshape(h, w, 3)
 
 
-def render_avi_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Fixture-video renderer: one real MJPEG AVI per row — each frame a
-    genuine baseline 4:4:4 JPEG from :func:`encode_jpeg` — executor-side
-    Arrow batches, same ingest shape as the other media renderers."""
-
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vids = []
-            for doc_id in pdf[id_col].astype("int64"):
-                w, h, n = _mjpeg_fixture_geom(int(doc_id))
-                jpegs = [
-                    encode_jpeg(w, h, _mjpeg_fixture_frame(int(doc_id), f, w, h))
-                    for f in range(n)
-                ]
-                vids.append(encode_avi_mjpeg(w, h, jpegs))
-            yield pd.DataFrame({id_col: pdf[id_col], "video": vids})
-
-    return df.select(id_col).mapInPandas(render, f"{id_col} long, video binary")
+def _avi_mjpeg_fixture(doc_id: int) -> bytes:
+    """One real MJPEG AVI — each frame a genuine baseline 4:4:4 JPEG
+    from :func:`encode_jpeg`."""
+    w, h, n = _mjpeg_fixture_geom(doc_id)
+    jpegs = [encode_jpeg(w, h, _mjpeg_fixture_frame(doc_id, f, w, h)) for f in range(n)]
+    return encode_avi_mjpeg(w, h, jpegs)
 
 
-def mjpeg_frame_check(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    vid_col: str = "video",
-    stride: int = FRAME_STRIDE,
-    safe: bool = False,
-) -> DataFrame:
+def mjpeg_frame_check(df: DataFrame, safe: bool = False) -> DataFrame:
     """COMPRESSED video decode + frame-sample stage: parse each AVI
     (:func:`decode_avi_mjpeg` — RIFF walk + per-frame JPEG decode), keep
-    every ``stride``-th frame, and emit per-document geometry plus the
-    JPEG bounded-error invariant: ``decode_ok`` = max per-channel
+    every ``FRAME_STRIDE``-th frame, and emit per-document geometry plus
+    the JPEG bounded-error invariant: ``decode_ok`` = max per-channel
     |decoded − reference| over the SAMPLED frames ≤ JPEG_TOLERANCE,
     with the reference regenerated arithmetically from (doc_id, frame)
     inside the executor batch — the decode_jpeg_check pattern extended
     across the container. Exact driver-checked values: declared
-    dimensions, total frame count, sampled indices. ``safe=True``: the
-    standard quarantine contract (non-MJPEG AVIs raise at the declared
-    seam and become status rows instead of killing the stage)."""
-    schema = (
-        f"{id_col} long, byte_len long, width long, height long, n_frames long, "
-        "sampled_frames string, decode_ok boolean"
-    )
-    if safe:
-        schema += ", status string, error string"
+    dimensions, total frame count, sampled indices. ``safe`` is the
+    :func:`_decode_stage` quarantine boundary (non-MJPEG AVIs raise at
+    the declared seam and become status rows)."""
 
-    def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [id_col, "byte_len", "width", "height", "n_frames",
-                "sampled_frames", "decode_ok"]
-        if safe:
-            cols += ["status", "error"]
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col].astype("int64"), pdf[vid_col]):
-                data = bytes(payload)
-                try:
-                    w, h, frames = decode_avi_mjpeg(data)
-                except ImportError:
-                    raise  # environment defect, not a payload defect
-                except Exception as exc:  # noqa: BLE001 — quarantine boundary
-                    if not safe:
-                        raise
-                    rows.append(
-                        (doc_id,) + (None,) * 6
-                        + (f"quarantined:{type(exc).__name__}", str(exc)[:_QUARANTINE_ERR_LEN])
-                    )
-                    continue
-                err = 0
-                for f in range(0, len(frames), stride):
-                    ref = _mjpeg_fixture_frame(int(doc_id), f, w, h).astype(np.int64)
-                    err = max(err, int(np.abs(frames[f].astype(np.int64) - ref).max()))
-                row = (
-                    doc_id,
-                    len(data),
-                    w,
-                    h,
-                    len(frames),
-                    ",".join(str(i) for i in range(0, len(frames), stride)),
-                    bool(err <= JPEG_TOLERANCE),
-                )
-                rows.append(row + ("ok", None) if safe else row)
-            yield pd.DataFrame(rows, columns=cols)
+    def row(doc_id, data: bytes, decoded) -> tuple:
+        w, h, frames = decoded
+        err = max(
+            (_max_err(frames[f], _mjpeg_fixture_frame(int(doc_id), f, w, h))
+             for f in range(0, len(frames), FRAME_STRIDE)),
+            default=0,
+        )
+        return *_frame_geom(data, w, h, frames), bool(err <= JPEG_TOLERANCE)
 
-    return df.select(id_col, vid_col).mapInPandas(check, schema)
+    return _decode_stage(df, _FRAME_COLS + ", decode_ok boolean", decode_avi_mjpeg, row, safe)
 
 
-def render_dib_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Fixture-video renderer for the UNCOMPRESSED-AVI branch (round
-    11): one raw-RGB DIB AVI per row, frames the same arithmetic pixels
-    as the MJPEG fixture — but the container is LOSSLESS, so the decode
-    is value-exact, not bounded-error."""
-
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            vids = []
-            for doc_id in pdf[id_col].astype("int64"):
-                w, h, n = _mjpeg_fixture_geom(int(doc_id))
-                frames = np.stack(
-                    [_mjpeg_fixture_frame(int(doc_id), f, w, h) for f in range(n)]
-                )
-                vids.append(encode_avi_rawrgb(w, h, frames))
-            yield pd.DataFrame({id_col: pdf[id_col], "video": vids})
-
-    return df.select(id_col).mapInPandas(render, f"{id_col} long, video binary")
+def _dib_fixture(doc_id: int) -> bytes:
+    """One raw-RGB DIB AVI: frames the same arithmetic pixels as the
+    MJPEG fixture, but the container is LOSSLESS, so the decode is
+    value-exact, not bounded-error."""
+    w, h, n = _mjpeg_fixture_geom(doc_id)
+    frames = np.stack([_mjpeg_fixture_frame(doc_id, f, w, h) for f in range(n)])
+    return encode_avi_rawrgb(w, h, frames)
 
 
-def dib_frame_stats(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    vid_col: str = "video",
-    stride: int = FRAME_STRIDE,
-    safe: bool = False,
-) -> DataFrame:
-    """UNCOMPRESSED video decode + frame-sample stage (round 11): parse
-    each raw-RGB DIB AVI via :func:`decode_avi_mjpeg`'s BI_RGB route
-    (the BMP row reader through the AVI chunk walk — bottom-up rows,
-    BGR, 4-byte padding all undone), keep every ``stride``-th frame,
-    and emit exact container byte length, avih geometry, frame count,
-    sampled indices and per-channel (R/G/B) pixel sums over the SAMPLED
-    frames. The container is lossless, so every output is an exact
-    integer the arithmetic oracle recomputes — a row-padding slip,
-    BGR/bottom-up mix-up, or chunk mis-walk is a value mismatch, the
-    stronger check the lossy MJPEG branch cannot make."""
-    schema = (
-        f"{id_col} long, byte_len long, width long, height long, n_frames long, "
-        "sampled_frames string, r_sum long, g_sum long, b_sum long"
-    )
-    if safe:
-        schema += ", status string, error string"
+def dib_frame_stats(df: DataFrame, safe: bool = False) -> DataFrame:
+    """UNCOMPRESSED video decode + frame-sample stage: parse each
+    raw-RGB DIB AVI via :func:`decode_avi_mjpeg`'s BI_RGB route (the BMP
+    row reader through the AVI chunk walk — bottom-up rows, BGR, 4-byte
+    padding all undone), keep every ``FRAME_STRIDE``-th frame, and emit
+    exact container byte length, avih geometry, frame count, sampled
+    indices and per-channel (R/G/B) pixel sums over the SAMPLED frames.
+    The container is lossless, so every output is an exact integer the
+    arithmetic oracle recomputes — a row-padding slip, BGR/bottom-up
+    mix-up, or chunk mis-walk is a value mismatch, the stronger check
+    the lossy MJPEG branch cannot make. ``safe`` is the
+    :func:`_decode_stage` quarantine boundary."""
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [id_col, "byte_len", "width", "height", "n_frames",
-                "sampled_frames", "r_sum", "g_sum", "b_sum"]
-        if safe:
-            cols += ["status", "error"]
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[vid_col]):
-                data = bytes(payload)
-                try:
-                    w, h, frames = decode_avi_mjpeg(data)
-                except Exception as exc:  # noqa: BLE001 — quarantine boundary
-                    if not safe:
-                        raise
-                    rows.append(
-                        (doc_id,) + (None,) * 8
-                        + (f"quarantined:{type(exc).__name__}", str(exc)[:_QUARANTINE_ERR_LEN])
-                    )
-                    continue
-                kept = frames[::stride].astype(np.int64)
-                row = (
-                    doc_id,
-                    len(data),
-                    w,
-                    h,
-                    len(frames),
-                    ",".join(str(i) for i in range(0, len(frames), stride)),
-                    int(kept[..., 0].sum()),
-                    int(kept[..., 1].sum()),
-                    int(kept[..., 2].sum()),
-                )
-                rows.append(row + ("ok", None) if safe else row)
-            yield pd.DataFrame(rows, columns=cols)
+    def row(doc_id, data: bytes, decoded) -> tuple:
+        w, h, frames = decoded
+        return *_frame_geom(data, w, h, frames), *_rgb_sums(frames[::FRAME_STRIDE])[1:]
 
-    return df.select(id_col, vid_col).mapInPandas(decode, schema)
+    cols = _FRAME_COLS + ", r_sum long, g_sum long, b_sum long"
+    return _decode_stage(df, cols, decode_avi_mjpeg, row, safe)
 
 
 # --------------------------------------------------------------------------
@@ -3048,42 +2792,6 @@ def encode_wav_f32(sample_rate: int, samples: np.ndarray) -> bytes:
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def render_g711_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Fixture renderer for the COMPRESSED-audio branch: the same
-    arithmetic samples as :func:`render_wav_payloads`, companded through
-    G.711 A-law into a real tag-6 RIFF/WAVE container (round 10 —
-    decoded natively by :func:`decode_wav` via the exhaustively-pinned
-    expander)."""
-
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            wavs = []
-            for doc_id in pdf[id_col].astype("int64"):
-                rate, ch, n = _wav_fixture_geom(int(doc_id))
-                wavs.append(encode_wav_alaw(rate, _wav_fixture_samples(int(doc_id), ch, n)))
-            yield pd.DataFrame({id_col: pdf[id_col], "audio": wavs})
-
-    return df.select(id_col).mapInPandas(render, f"{id_col} long, audio binary")
-
-
-def render_f32_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Fixture renderer for the IEEE-float branch: the same arithmetic
-    samples as :func:`render_wav_payloads` written as tag-3 float32
-    containers (round 11 — decoded natively by :func:`decode_wav`; the
-    fixture values k/2^15 are exact dyadics, so the float round-trip is
-    bit-exact and the audio_wav arithmetic oracle applies unchanged)."""
-
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            wavs = []
-            for doc_id in pdf[id_col].astype("int64"):
-                rate, ch, n = _wav_fixture_geom(int(doc_id))
-                wavs.append(encode_wav_f32(rate, _wav_fixture_samples(int(doc_id), ch, n)))
-            yield pd.DataFrame({id_col: pdf[id_col], "audio": wavs})
-
-    return df.select(id_col).mapInPandas(render, f"{id_col} long, audio binary")
-
-
 # --------------------------------------------------------------------------
 # IMA-ADPCM (WAV format tag 0x11) — round 11. The block-structured 4-bit
 # adaptive-differential codec (IMA "DVI4" algorithm; CPython's audioop
@@ -3272,28 +2980,7 @@ def _adpcm_fixture_samples(doc_id: int, ch: int, n: int) -> np.ndarray:
     return (np.abs(((17 * doc_id + 29 * i) % 4096) - 2048) - 1024).astype(np.int16).reshape(n, ch)
 
 
-def render_adpcm_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Fixture renderer for the IMA-ADPCM branch: the triangle-wave
-    fixture compressed 4:1 into real tag-0x11 containers (multi-block,
-    carried step index, fact-trimmed final block)."""
-
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            wavs = []
-            for doc_id in pdf[id_col].astype("int64"):
-                rate, ch, n = _wav_fixture_geom(int(doc_id))
-                wavs.append(encode_wav_adpcm(rate, _adpcm_fixture_samples(int(doc_id), ch, n)))
-            yield pd.DataFrame({id_col: pdf[id_col], "audio": wavs})
-
-    return df.select(id_col).mapInPandas(render, f"{id_col} long, audio binary")
-
-
-def adpcm_roundtrip_check(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    audio_col: str = "audio",
-    safe: bool = False,
-) -> DataFrame:
+def adpcm_roundtrip_check(df: DataFrame, safe: bool = False) -> DataFrame:
     """LOSSY-audio decode stage (the decode_jpeg_check pattern at the
     audio seam): parse each IMA-ADPCM WAV with the native decoder and
     emit exact geometry (container bytes, rate, channels, samples,
@@ -3302,47 +2989,15 @@ def adpcm_roundtrip_check(
     doc_id inside the executor batch. ADPCM is differential — a wrong
     step table, nibble order, or block-state handoff diverges by the
     full signal swing, far past the pinned tolerance."""
-    schema = (
-        f"{id_col} long, byte_len long, sample_rate long, n_channels long, "
-        "n_samples long, duration_us long, decode_ok boolean"
-    )
-    if safe:
-        schema += ", status string, error string"
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [id_col, "byte_len", "sample_rate", "n_channels", "n_samples",
-                "duration_us", "decode_ok"]
-        if safe:
-            cols += ["status", "error"]
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf[id_col], pdf[audio_col]):
-                data = bytes(payload)
-                try:
-                    rate, samples = decode_wav(data)
-                except ImportError:
-                    raise  # environment defect, not a payload defect
-                except Exception as exc:  # noqa: BLE001 — quarantine boundary
-                    if not safe:
-                        raise
-                    rows.append(
-                        (doc_id,) + (None,) * 6
-                        + (f"quarantined:{type(exc).__name__}", str(exc)[:_QUARANTINE_ERR_LEN])
-                    )
-                    continue
-                _, ch, n = _wav_fixture_geom(int(doc_id))
-                ref = _adpcm_fixture_samples(int(doc_id), ch, n)
-                ok = (
-                    samples.shape == ref.shape
-                    and int(np.abs(samples.astype(np.int64) - ref.astype(np.int64)).max())
-                    <= ADPCM_TOLERANCE
-                )
-                row = (doc_id, len(data), rate, samples.shape[1], samples.shape[0],
-                       samples.shape[0] * 1_000_000 // rate, bool(ok))
-                rows.append(row + ("ok", None) if safe else row)
-            yield pd.DataFrame(rows, columns=cols)
+    def row(doc_id, data: bytes, decoded) -> tuple:
+        rate, samples = decoded
+        _, ch, n = _wav_fixture_geom(int(doc_id))
+        ref = _adpcm_fixture_samples(int(doc_id), ch, n)
+        ok = samples.shape == ref.shape and _max_err(samples, ref) <= ADPCM_TOLERANCE
+        return *_audio_geom(data, rate, samples), bool(ok)
 
-    return df.select(id_col, audio_col).mapInPandas(decode, schema)
+    return _decode_stage(df, _AUDIO_COLS + ", decode_ok boolean", decode_wav, row, safe)
 
 
 # --------------------------------------------------------------------
@@ -4035,25 +3690,54 @@ def decode_audio_native(payload: bytes) -> tuple[int, np.ndarray]:
     return decode_wav(payload)
 
 
-def render_flac_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Fixture renderer for the FLAC branch: the SAME samples and
-    geometry as the WAV fixture, Rice-compressed into real FLAC
-    containers. Stereo docs cycle the inter-channel decorrelation
-    modes by doc arithmetic ((doc_id // 10) % 4 over the sampled docs)
-    so every channel assignment the format defines flows through the
-    driver gate; mono docs use the independent layout the spec
-    requires."""
-    modes = ["independent", "left-side", "right-side", "mid-side"]
+def _flac_fixture(doc_id: int) -> bytes:
+    """The SAME samples and geometry as the WAV fixture, Rice-compressed
+    into a real FLAC container. Stereo docs cycle the inter-channel
+    decorrelation modes by doc arithmetic ((doc_id // 10) % 4 over the
+    sampled docs) so every channel assignment the format defines flows
+    through the driver gate; mono docs use the independent layout the
+    spec requires."""
+    rate, ch, n = _wav_fixture_geom(doc_id)
+    modes = ("independent", "left-side", "right-side", "mid-side")
+    mode = modes[(doc_id // 10) % 4] if ch == 2 else "independent"
+    return encode_flac(rate, _wav_fixture_samples(doc_id, ch, n), stereo_mode=mode)
 
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+
+# --------------------------------------------------------------------------
+# Fixture renderer: one table, format -> (doc_id -> payload bytes). Every
+# payload is a deterministic function of the id, so the SQL oracle
+# regenerates what each decode stage must find.
+# --------------------------------------------------------------------------
+
+_FIXTURES = {
+    "ppm": _still_fixture(encode_ppm),
+    "png": _still_fixture(encode_png),  # zlib-PNG, filters cycling per row
+    "jpeg": _jpeg_fixture,
+    "quarantine": _quarantine_fixture,
+    "wav": _audio_fixture(encode_wav),
+    "pcm_variant": _pcm_variant_fixture,
+    "g711": _audio_fixture(encode_wav_alaw),  # A-law, tag 6
+    "f32": _audio_fixture(encode_wav_f32),  # IEEE float, tag 3; k/2^15 values round-trip exactly
+    "adpcm": _audio_fixture(encode_wav_adpcm, _adpcm_fixture_samples),  # IMA-ADPCM, tag 0x11
+    "flac": _flac_fixture,
+    "y4m": _y4m_fixture,
+    "avi_mjpeg": _avi_mjpeg_fixture,
+    "dib": _dib_fixture,
+}
+
+
+def render_payloads(df: DataFrame, fmt: str) -> DataFrame:
+    """Fixture renderer: one real ``fmt`` payload per ``doc_id`` row
+    (``_FIXTURES``), emitted as ``doc_id long, payload binary``.
+    mapInPandas so the binary payloads are born executor-side in Arrow
+    batches and never touch the driver — the ingest shape of a real
+    media pipeline (which reads bytes via binaryFile/parquet instead of
+    rendering)."""
+    render = _FIXTURES[fmt]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            flacs = []
-            for doc_id in pdf[id_col].astype("int64"):
-                rate, ch, n = _wav_fixture_geom(int(doc_id))
-                mode = modes[(int(doc_id) // 10) % 4] if ch == 2 else "independent"
-                flacs.append(
-                    encode_flac(rate, _wav_fixture_samples(int(doc_id), ch, n), stereo_mode=mode)
-                )
-            yield pd.DataFrame({id_col: pdf[id_col], "audio": flacs})
+            payloads = [render(int(doc_id)) for doc_id in pdf[ID_COL]]
+            yield pd.DataFrame({ID_COL: pdf[ID_COL], PAYLOAD_COL: payloads})
 
-    return df.select(id_col).mapInPandas(render, f"{id_col} long, audio binary")
+    return df.select(ID_COL).mapInPandas(run, f"{ID_COL} long, {PAYLOAD_COL} binary")

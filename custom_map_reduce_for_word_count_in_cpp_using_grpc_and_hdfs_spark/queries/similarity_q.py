@@ -3,6 +3,9 @@ operators/multimodal.py)."""
 
 from __future__ import annotations
 
+import functools
+import operator
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -137,6 +140,81 @@ def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx = approx.select("query_id", "neighbor_id")
     exact = S.brute_force_topk(queries, emb, TOP_K).select("query_id", "neighbor_id")
     return _recall_invariant(approx, exact, queries, 0.65, "recall_ge_0_65")
+
+
+#: The tagged union every mm_suite branch fills, after ``op``:
+#: (column, type). Slots a branch does not use are typed nulls.
+_MM_UNION = (
+    ("doc_id", "long"), ("payload_md5", "string"), ("modality", "string"),
+    ("byte_len", "long"), ("width", "long"), ("height", "long"), ("n_frames", "long"),
+    ("resized_w", "long"), ("resized_h", "long"), ("sampled_frames", "string"),
+    ("maxval", "long"), ("pixel_sum", "long"), ("r_sum", "long"), ("g_sum", "long"),
+    ("b_sum", "long"), ("decode_ok", "boolean"), ("status", "string"),
+)
+
+
+def _same(*cols: str) -> dict:
+    return {c: c for c in cols}
+
+
+# Union-slot mappings, union column -> stage column (a tuple is summed).
+_IMAGE = _same("doc_id", "width", "height", "maxval", "pixel_sum", "r_sum", "g_sum", "b_sum")
+_FRAMES = _same("doc_id", "width", "height", "n_frames", "sampled_frames")
+_AUDIO = {**_same("doc_id"), "width": "sample_rate", "height": "n_channels",
+          "n_frames": "n_samples", "resized_w": "duration_us"}
+_AUDIO_SUMS = {**_AUDIO, "pixel_sum": "abs_sum", "r_sum": "ch0_sum", "g_sum": "ch1_sum"}
+
+
+def _quarantine_stats(rendered: DataFrame) -> DataFrame:
+    return MM.decode_image_stats(rendered, safe=True)
+
+
+def _quarantine_rollup(rendered: DataFrame) -> DataFrame:
+    return MM.quarantine_summary(_quarantine_stats(rendered))
+
+
+#: mm_suite's render -> decode branches in union order: (op, fixture
+#: format, decode stage, all docs (else the doc_id % 10 == 0 sample),
+#: union slots). tools/mm_scale.py times the same table.
+MM_BRANCHES = (
+    ("real_decode", "ppm", MM.decode_image_stats, True, _IMAGE),
+    ("png_decode", "png", MM.decode_image_stats, True, _IMAGE),
+    ("jpeg_decode", "jpeg", MM.decode_jpeg_check, False,
+     _same("doc_id", "width", "height", "decode_ok")),
+    ("quarantine", "quarantine", _quarantine_stats, False, {**_IMAGE, "status": "status"}),
+    ("quarantine_summary", "quarantine", _quarantine_rollup, False,
+     {"byte_len": "n_docs", "status": "status"}),
+    ("video_y4m", "y4m", MM.video_frame_stats, False,
+     {**_FRAMES, "byte_len": "byte_len", "pixel_sum": ("y_sum", "cb_sum", "cr_sum"),
+      "r_sum": "y_sum", "g_sum": "cb_sum", "b_sum": "cr_sum"}),
+    ("audio_wav", "pcm_variant", MM.audio_features, False, {**_AUDIO_SUMS, "byte_len": "byte_len"}),
+    ("image_resize", "ppm", MM.resized_image_stats, True,
+     _same("doc_id", "width", "height", "resized_w", "resized_h", "pixel_sum", "r_sum", "g_sum", "b_sum")),
+    ("video_mjpeg", "avi_mjpeg", MM.mjpeg_frame_check, False,
+     {**_FRAMES, "decode_ok": "decode_ok"}),
+    ("audio_g711", "g711", MM.audio_features, False, {**_AUDIO_SUMS, "byte_len": "byte_len"}),
+    ("audio_f32", "f32", MM.audio_features, False, {**_AUDIO_SUMS, "byte_len": "byte_len"}),
+    ("audio_flac", "flac", MM.audio_features, False, _AUDIO_SUMS),
+    ("audio_adpcm", "adpcm", MM.adpcm_roundtrip_check, False,
+     {**_AUDIO, "byte_len": "byte_len", "decode_ok": "decode_ok"}),
+    ("video_dib", "dib", MM.dib_frame_stats, False,
+     {**_FRAMES, "byte_len": "byte_len", "pixel_sum": ("r_sum", "g_sum", "b_sum"),
+      **_same("r_sum", "g_sum", "b_sum")}),
+)
+
+
+def _union_rows(op: str, df: DataFrame, slots: dict) -> DataFrame:
+    """Project one branch onto the 18-column tagged union."""
+
+    def slot(col: str, dtype: str):
+        src = slots.get(col)
+        if src is None:
+            return F.lit(None).cast(dtype).alias(col)
+        if isinstance(src, tuple):
+            return functools.reduce(operator.add, map(F.col, src)).alias(col)
+        return col if src == col else F.col(src).alias(col)
+
+    return df.select(F.lit(op).alias("op"), *(slot(c, t) for c, t in _MM_UNION))
 
 
 @query(
@@ -527,388 +605,75 @@ def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def mm_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The multimodal surface end to end, one tagged union (round-4
-    registry consolidation of the former mm_suite + mm_real_decode):
+    """The multimodal surface end to end, one tagged union. Every branch
+    renders real payloads executor-side from doc_id arithmetic
+    (``MM.render_payloads``), decodes them with the pure-numpy codecs in
+    an Arrow-batched stage and lands in the union slots below; the
+    oracle regenerates every value arithmetically, so a codec bug is a
+    hash mismatch. Lossy codecs (JPEG, MJPEG, ADPCM) carry an in-plan
+    ``decode_ok`` bound instead of exact sums.
 
-    - op='meta_decode': rows carry (payload: binary, meta: struct) —
-      payload proven byte-exact via md5 over the bytes on both engines,
-      metadata projected from the struct — then the deterministic
-      stand-in codec decodes, resizes (aspect-preserving integer fit
-      into a 224-box) and frame-samples each Arrow batch via mapInPandas
-      (see operators/multimodal.py).
-    - op='real_decode': REAL image decode end to end — per document,
-      render an actual binary PPM (P6) payload executor-side (pixel
-      values a deterministic arithmetic function of doc_id), then DECODE
-      THE BYTES with the pure-numpy PPM parser — header grammar, raster
-      layout — and emit decoded dimensions + whole-image and per-channel
-      pixel sums. The oracle regenerates every pixel arithmetically via
-      generate_series, so any codec bug (header mis-parse, offset slip,
-      channel-order swap) is a hash mismatch. Both stages are
-      Arrow-batched mapInPandas: binary payloads are born and consumed
-      on executors, never on the driver — the exact plumbing a
-      JPEG/ffmpeg pipeline uses at 100 TB (see
-      operators/multimodal.py decode_image_real for the dispatch seam).
-    - op='png_decode' (round 5): the SAME fixture pixels through a real
-      COMPRESSED container — zlib-PNG with per-row filter cycling and
-      CRC'd chunks (operators/multimodal.py decode_png, stdlib zlib
-      only). Inflate + defilter must reproduce the arithmetic pixel
-      sums bit-exactly, so the compressed-codec seam is proven, not
-      stubbed.
-    - op='jpeg_decode' (round 6; progressive round 8): the fixture
-      pixels through a real TRANSFORM codec — JFIF (multimodal.py
-      encode_jpeg / decode_jpeg: DCT, canonical Huffman from the DHT
-      segments, byte stuffing, YCbCr), with every fourth JPEG doc
-      rendered as an 8-scan PROGRESSIVE (SOF2) stream — successive
-      approximation + EOB-run coding per T.81 Annex G, decoded by the
-      same decoder. JPEG is lossy by design, so the driver-exact values
-      are the decoded dimensions and the pixel check is in-plan:
-      decode_ok = max |decoded - arithmetic reference| <= JPEG_TOLERANCE
-      (the recall-invariant pattern; the tolerance is the measured
-      unit-quant round-trip bound, tests/test_multimodal.py — and a
-      progressive stream decodes EXACTLY equal to its baseline
-      encoding, pinned there too). Sampled doc_id % 10 == 0 to bound
-      Python entropy-decode cost at scale. The remaining
-      NotImplementedError seams: arithmetic-coded JPEG and video
-      (PIL/libvips/ffmpeg drop in at decode_image_real).
-    - op='quarantine' (round 8): the safe-decode route. Three failure
-      classes a real 100 TB ingest hits — truncated stream,
-      arithmetic-coded JPEG (SOF9, real-but-unsupported), unknown
-      container magic — planted by doc_id arithmetic among good PPMs in
-      the same Arrow batches; decode_image_stats(safe=True) turns them
-      into status='quarantined:<ExceptionClass>' rows with null stats
-      while the good neighbors decode to hash-exact pixel sums. No
-      stage-killing decode path remains: strict mode stays the
-      fixture-pipeline default, safe mode is the production ingest
-      posture.
-    - op='quarantine_summary' (round 9): the one-pass per-status rollup
-      (operators/multimodal.py quarantine_summary) over the same
-      safe-decode output — per-status doc counts, driver-checked, so
-      the quarantine RATE is a first-class observable next to the
-      decode itself.
-    - op='video_y4m' (round 9): REAL video-container decode — raw
-      YUV4MPEG2 streams (the mjpegtools/ffmpeg raw-video interchange
-      format) rendered executor-side, parsed natively (header parameter
-      scan, length-based FRAME split), frame-sampled every
-      FRAME_STRIDE-th, per-plane Y/Cb/Cr byte sums + exact container
-      byte length vs the arithmetic oracle. Moves the video seam from
-      "all video" to COMPRESSED video only (H.264 etc. remain at the
-      ffmpeg drop-in behind the same mapInPandas batch iterator).
-    - op='audio_wav' (round 9): REAL audio-container decode — RIFF/WAVE
-      16-bit PCM, chunk-walked (LIST/fact chunks and odd-size padding
-      handled), mono and stereo both exercised; features are exact
-      integers (container bytes, duration µs, per-channel sums, L1
-      energy) vs the arithmetic oracle. With images and Y4M video, all
-      three media modalities now decode REAL containers natively;
-      compressed audio (MP3/AAC) remains at the libsndfile/ffmpeg seam.
-    - op='video_mjpeg' (round 10): COMPRESSED video-container decode —
-      MJPEG-in-AVI (the webcam/capture interchange format): RIFF chunk
-      walk (LIST hdrl → avih geometry + strh/strf codec check, LIST
-      movi → '00dc' frame chunks) composed with the native decode_jpeg
-      per frame, frame-sampled every FRAME_STRIDE-th. Exact driver
-      values are the avih geometry + frame count + sampled indices;
-      pixels ride the in-plan bounded-error invariant (decode_ok, the
-      jpeg_decode pattern — JPEG is lossy by design). Non-MJPEG AVIs
-      raise at the declared seam, shrinking the video gap to
-      INTER-frame codecs (H.264/VP9 → ffmpeg adapter) only.
-    - op='audio_g711' (round 10): COMPRESSED audio decoded NATIVELY —
-      the fixture samples companded through G.711 A-law into real tag-6
-      RIFF/WAVE containers (fact chunk, odd-size data padding) and
-      expanded back by decode_wav's exhaustively-pinned compander; the
-      oracle re-renders the quantizer itself in SQL (13-bit magnitude,
-      8-segment CASE, midpoint + segment boost) and matches the
-      quantized channel/L1 sums exactly — compander, container walk and
-      de-interleave all value-checked cross-engine. µ-law rides the
-      same native path (pytest-pinned); float/ADPCM went native in
-      round 11 (op='audio_f32' / op='audio_adpcm' below).
-    - op='image_resize' (round 9): the REAL resize kernel — decode +
-      aspect-preserving nearest-neighbor fit (no upscale), the resized
-      raster's per-channel sums hash-checked against the oracle's
-      re-derivation of every output pixel (NN resampling is pure index
-      arithmetic, so the KERNEL is verified, not just the geometry).
-    - op='audio_f32' (round 11): IEEE-float WAV (tag 3) decoded
-      natively — fixture values k/2^15 are exact dyadics, so the
-      float32 container round-trips bit-exactly into the same PCM
-      arithmetic oracle (byte_len switches to 4-byte samples + fact).
-    - op='audio_adpcm' (round 11): IMA-ADPCM WAV (tag 0x11) decoded
-      natively — the block-structured 4-bit DIFFERENTIAL codec (decoder
-      pinned bit-exact vs audioop's IMA state machine in tests;
-      multi-block, carried step index, fact-trimmed final block at
-      every fixture doc). Lossy, so exact driver values are the
-      container geometry (block-arithmetic byte_len, rate/ch/n/
-      duration) and samples ride decode_ok ≤ ADPCM_TOLERANCE vs the
-      triangle-wave reference — the jpeg_decode pattern at the audio
-      seam.
-    - op='video_dib' (round 11): UNCOMPRESSED AVI — raw-RGB DIB frames
-      (bottom-up BGR rows, 4-byte padding: the BMP raster through the
-      AVI chunk walk). Lossless, so unlike video_mjpeg the per-channel
-      pixel sums are exact oracle values, not a bounded invariant.
-      With these three the native A/V seam shrank to ENTROPY-coded
-      formats; round 12's audio_flac moves it to PERCEPTUAL formats
-      only (MP3/AAC, H.264/VP9 — the ffmpeg adapter).
+    ==================  ===========  ======================  ======  ===============================
+    op                  format       stage                   docs    union slots
+    ==================  ===========  ======================  ======  ===============================
+    meta_decode         text         fake_decode_meta        all     payload_md5 .. sampled_frames
+    real_decode         ppm          decode_image_stats      all     image stats
+    png_decode          png          decode_image_stats      all     image stats
+    jpeg_decode         jpeg         decode_jpeg_check       sample  width, height, decode_ok
+    binary_ingest       .ppm files   decode_image_stats      sample  image stats, byte_len
+    quarantine          quarantine   decode_image_stats      sample  image stats, status (safe mode)
+    quarantine_summary  quarantine   quarantine_summary      sample  byte_len <- n_docs, status
+    video_y4m           y4m          video_frame_stats       sample  frames, r/g/b <- Y/Cb/Cr sums
+    audio_wav           pcm_variant  audio_features          sample  audio, audio sums
+    image_resize        ppm          resized_image_stats     all     width .. resized_h, sums
+    video_mjpeg         avi_mjpeg    mjpeg_frame_check       sample  frames but byte_len, decode_ok
+    audio_g711          g711         audio_features          sample  audio, audio sums
+    audio_f32           f32          audio_features          sample  audio, audio sums
+    audio_flac          flac         audio_features          sample  audio but byte_len, audio sums
+    audio_adpcm         adpcm        adpcm_roundtrip_check   sample  audio, decode_ok
+    video_dib           dib          dib_frame_stats         sample  frames, r/g/b sums
+    ==================  ===========  ======================  ======  ===============================
+
+    - sample: doc_id % 10 == 0;
+    - image stats: width, height, maxval, pixel_sum, r/g/b_sum;
+    - frames: byte_len, width, height, n_frames, sampled_frames, with
+      pixel_sum = r + g + b;
+    - audio: byte_len, width <- sample_rate, height <- n_channels,
+      n_frames <- n_samples, resized_w <- duration_us;
+    - audio sums: pixel_sum <- abs_sum, r_sum <- ch0_sum, g_sum <- ch1_sum.
+
+    byte_len is null where the oracle cannot derive it (FLAC's Rice code
+    lengths; MJPEG's JPEG frames). The quarantine branch drops the
+    free-text error column: exception messages vary across numpy
+    versions, exception classes cannot.
     """
     docs = load_table(spark, sf_dir, "documents")
+    sampled = docs.where(F.col("doc_id") % 10 == 0)
     with_payload = MM.attach_payload(docs)
     meta = with_payload.select(
         "doc_id",
         F.md5("payload").alias("payload_md5"),
         F.col("meta.modality").alias("modality"),
     )
-    decoded = MM.fake_decode_meta(with_payload)
-    nb = F.lit(None).cast("long")
-    ns = F.lit(None).cast("string")
-    nflag = F.lit(None).cast("boolean")
-    meta_rows = meta.join(decoded, "doc_id").select(
-        F.lit("meta_decode").alias("op"),
+    meta_slots = _same(
         "doc_id", "payload_md5", "modality", "byte_len", "width", "height", "n_frames",
         "resized_w", "resized_h", "sampled_frames",
-        nb.alias("maxval"), nb.alias("pixel_sum"),
-        nb.alias("r_sum"), nb.alias("g_sum"), nb.alias("b_sum"),
-        nflag.alias("decode_ok"), ns.alias("status"),
     )
-    def decoded_rows(op: str, rendered: DataFrame) -> DataFrame:
-        return MM.decode_image_stats(rendered).select(
-            F.lit(op).alias("op"),
-            "doc_id", ns.alias("payload_md5"), ns.alias("modality"), nb.alias("byte_len"),
-            "width", "height", nb.alias("n_frames"),
-            nb.alias("resized_w"), nb.alias("resized_h"), ns.alias("sampled_frames"),
-            "maxval", "pixel_sum", "r_sum", "g_sum", "b_sum",
-            nflag.alias("decode_ok"), ns.alias("status"),
-        )
-
-    real_rows = decoded_rows("real_decode", MM.render_ppm_payloads(docs))
-    png_rows = decoded_rows("png_decode", MM.render_png_payloads(docs))
-    jpeg_docs = docs.where(F.col("doc_id") % 10 == 0)
-    jpeg_rows = MM.decode_jpeg_check(MM.render_jpeg_payloads(jpeg_docs)).select(
-        F.lit("jpeg_decode").alias("op"),
-        "doc_id", ns.alias("payload_md5"), ns.alias("modality"), nb.alias("byte_len"),
-        "width", "height", nb.alias("n_frames"),
-        nb.alias("resized_w"), nb.alias("resized_h"), ns.alias("sampled_frames"),
-        nb.alias("maxval"), nb.alias("pixel_sum"),
-        nb.alias("r_sum"), nb.alias("g_sum"), nb.alias("b_sum"),
-        "decode_ok", ns.alias("status"),
-    )
-    # op='quarantine' (round 8, VERDICT r7 item 1): safe-mode decode over
-    # a batch with three planted failure classes (truncated PPM,
-    # arithmetic-coded JPEG, unknown magic). The job completes, good rows stay
-    # hash-exact, bad rows surface as status='quarantined:<ExcType>' —
-    # the posture a 100 TB ingest needs (one corrupt file among billions
-    # must not kill the stage). The free-text error column is dropped
-    # here (kept for triage in the operator output): exception MESSAGES
-    # can vary across numpy versions, exception CLASSES cannot.
-    q_stats = MM.decode_image_stats(MM.render_quarantine_payloads(jpeg_docs), safe=True)
-    quarantine_rows = q_stats.select(
-        F.lit("quarantine").alias("op"),
-        "doc_id", ns.alias("payload_md5"), ns.alias("modality"), nb.alias("byte_len"),
-        "width", "height", nb.alias("n_frames"),
-        nb.alias("resized_w"), nb.alias("resized_h"), ns.alias("sampled_frames"),
-        "maxval", "pixel_sum", "r_sum", "g_sum", "b_sum",
-        nflag.alias("decode_ok"), "status",
-    )
-    # op='quarantine_summary' (round 9, VERDICT r8 item 7): the one-pass
-    # quarantine-rate rollup a 100 TB ingest watches next to the decode —
-    # per-status doc counts (in byte_len) over the same safe-decode
-    # output. The operator also emits share + a triage example error;
-    # the driver row keeps the driver-stable columns (counts + status —
-    # error MESSAGES vary across numpy versions, counts and CLASSES
-    # cannot).
-    # op='video_y4m' (round 9): REAL video-container decode — one raw
-    # YUV4MPEG2 stream per sampled doc rendered executor-side, parsed by
-    # the native Y4M decoder (header parameter scan + length-based FRAME
-    # split), every FRAME_STRIDE-th frame kept, per-plane byte sums over
-    # the sampled frames. Exact end to end (the fixture bytes ARE the
-    # planes — no color conversion), so the oracle regenerates every
-    # byte arithmetically: byte_len = exact container size, pixel_sum =
-    # y+cb+cr, and the r/g/b columns carry the Y/Cb/Cr plane sums.
-    video_rows = MM.video_frame_stats(MM.render_y4m_payloads(jpeg_docs)).select(
-        F.lit("video_y4m").alias("op"),
-        "doc_id", ns.alias("payload_md5"), ns.alias("modality"), "byte_len",
-        "width", "height", "n_frames",
-        nb.alias("resized_w"), nb.alias("resized_h"), "sampled_frames",
-        nb.alias("maxval"),
-        (F.col("y_sum") + F.col("cb_sum") + F.col("cr_sum")).alias("pixel_sum"),
-        F.col("y_sum").alias("r_sum"), F.col("cb_sum").alias("g_sum"),
-        F.col("cr_sum").alias("b_sum"),
-        nflag.alias("decode_ok"), ns.alias("status"),
-    )
-    # op='audio_wav' (round 9): REAL audio-container decode — one RIFF/
-    # WAVE (16-bit PCM) per sampled doc, chunk-walked by the native WAV
-    # parser, per-document features all integers. Union-schema mapping
-    # (documented here because the tagged union reuses column slots):
-    # width=sample_rate, height=n_channels, n_frames=n_samples,
-    # resized_w=duration_us, pixel_sum=abs_sum (L1 energy),
-    # r_sum=ch0_sum, g_sum=ch1_sum (NULL for mono).
-    audio_rows = MM.audio_features(MM.render_pcm_variant_payloads(jpeg_docs)).select(
-        F.lit("audio_wav").alias("op"),
-        "doc_id", ns.alias("payload_md5"), ns.alias("modality"), "byte_len",
-        F.col("sample_rate").alias("width"), F.col("n_channels").alias("height"),
-        F.col("n_samples").alias("n_frames"),
-        F.col("duration_us").alias("resized_w"), nb.alias("resized_h"),
-        ns.alias("sampled_frames"), nb.alias("maxval"),
-        F.col("abs_sum").alias("pixel_sum"),
-        F.col("ch0_sum").alias("r_sum"), F.col("ch1_sum").alias("g_sum"),
-        nb.alias("b_sum"),
-        nflag.alias("decode_ok"), ns.alias("status"),
-    )
-    # op='image_resize' (round 9): decode -> REAL nearest-neighbor
-    # resize (aspect-preserving 8-box fit, no upscale) -> sums of the
-    # RESIZED raster. NN resampling is pure index arithmetic, so the
-    # oracle re-derives every output pixel — the resize KERNEL is
-    # hash-checked, not just the plumbing (fake_decode_meta's resized_w/h
-    # checked only the geometry arithmetic).
-    resize_rows = MM.resized_image_stats(MM.render_ppm_payloads(docs), box=8).select(
-        F.lit("image_resize").alias("op"),
-        "doc_id", ns.alias("payload_md5"), ns.alias("modality"), nb.alias("byte_len"),
-        "width", "height", nb.alias("n_frames"),
-        F.col("resized_w"), F.col("resized_h"), ns.alias("sampled_frames"),
-        nb.alias("maxval"), "pixel_sum", "r_sum", "g_sum", "b_sum",
-        nflag.alias("decode_ok"), ns.alias("status"),
-    )
-    # op='audio_g711' (round 10): COMPRESSED audio decoded natively —
-    # A-law (tag 6) containers of the same fixture samples, expanded by
-    # the exhaustively-pinned compander inside decode_wav; the oracle
-    # recomputes the quantized sums via the SQL quantizer, so the
-    # compander itself is value-checked cross-engine. Same union-slot
-    # mapping as audio_wav.
-    g711_rows = MM.audio_features(MM.render_g711_payloads(jpeg_docs)).select(
-        F.lit("audio_g711").alias("op"),
-        "doc_id", ns.alias("payload_md5"), ns.alias("modality"), "byte_len",
-        F.col("sample_rate").alias("width"), F.col("n_channels").alias("height"),
-        F.col("n_samples").alias("n_frames"),
-        F.col("duration_us").alias("resized_w"), nb.alias("resized_h"),
-        ns.alias("sampled_frames"), nb.alias("maxval"),
-        F.col("abs_sum").alias("pixel_sum"),
-        F.col("ch0_sum").alias("r_sum"), F.col("ch1_sum").alias("g_sum"),
-        nb.alias("b_sum"),
-        nflag.alias("decode_ok"), ns.alias("status"),
-    )
-    # op='video_mjpeg' (round 10): compressed-container video — RIFF/AVI
-    # walk + per-frame JPEG decode; exact geometry/count/indices, pixel
-    # correctness via the in-plan bounded-error invariant (decode_ok).
-    mjpeg_rows = MM.mjpeg_frame_check(MM.render_avi_payloads(jpeg_docs)).select(
-        F.lit("video_mjpeg").alias("op"),
-        "doc_id", ns.alias("payload_md5"), ns.alias("modality"), nb.alias("byte_len"),
-        "width", "height", "n_frames",
-        nb.alias("resized_w"), nb.alias("resized_h"), "sampled_frames",
-        nb.alias("maxval"), nb.alias("pixel_sum"),
-        nb.alias("r_sum"), nb.alias("g_sum"), nb.alias("b_sum"),
-        "decode_ok", ns.alias("status"),
-    )
-    # op='audio_f32' (round 11): IEEE-float WAV (tag 3) decoded natively
-    # — fixture values k/2^15 are exact dyadics, so the float round-trip
-    # is bit-exact and the PCM arithmetic oracle applies verbatim; only
-    # byte_len changes (4-byte samples + the fact chunk). Same
-    # union-slot mapping as audio_wav.
-    f32_rows = MM.audio_features(MM.render_f32_payloads(jpeg_docs)).select(
-        F.lit("audio_f32").alias("op"),
-        "doc_id", ns.alias("payload_md5"), ns.alias("modality"), "byte_len",
-        F.col("sample_rate").alias("width"), F.col("n_channels").alias("height"),
-        F.col("n_samples").alias("n_frames"),
-        F.col("duration_us").alias("resized_w"), nb.alias("resized_h"),
-        ns.alias("sampled_frames"), nb.alias("maxval"),
-        F.col("abs_sum").alias("pixel_sum"),
-        F.col("ch0_sum").alias("r_sum"), F.col("ch1_sum").alias("g_sum"),
-        nb.alias("b_sum"),
-        nflag.alias("decode_ok"), ns.alias("status"),
-    )
-    # op='audio_flac' (round 12): FLAC decoded NATIVELY — the entropy
-    # codec milestone: Rice-coded fixed-prediction residuals, all four
-    # stereo channel assignments cycled by doc arithmetic, CRC-8/16 and
-    # STREAMINFO-MD5 self-verified in the decoder. Lossless, so the
-    # exact PCM sums apply verbatim (same union-slot mapping as
-    # audio_wav); byte_len is NULL — Rice lengths aren't
-    # SQL-expressible, which is precisely what distinguishes an entropy
-    # container from the fixed-layout ones.
-    flac_rows = MM.audio_features(MM.render_flac_payloads(jpeg_docs)).select(
-        F.lit("audio_flac").alias("op"),
-        "doc_id", ns.alias("payload_md5"), ns.alias("modality"), nb.alias("byte_len"),
-        F.col("sample_rate").alias("width"), F.col("n_channels").alias("height"),
-        F.col("n_samples").alias("n_frames"),
-        F.col("duration_us").alias("resized_w"), nb.alias("resized_h"),
-        ns.alias("sampled_frames"), nb.alias("maxval"),
-        F.col("abs_sum").alias("pixel_sum"),
-        F.col("ch0_sum").alias("r_sum"), F.col("ch1_sum").alias("g_sum"),
-        nb.alias("b_sum"),
-        nflag.alias("decode_ok"), ns.alias("status"),
-    )
-    # op='audio_adpcm' (round 11): IMA-ADPCM WAV (tag 0x11) decoded
-    # natively — block-structured 4-bit differential codec, multi-block
-    # with carried step index and fact-trimmed padding at every fixture
-    # doc. ADPCM is LOSSY, so exact driver values are the container
-    # geometry (byte_len from the block arithmetic, rate/ch/n/duration)
-    # and sample correctness is the in-plan bounded-error invariant
-    # (decode_ok ≤ ADPCM_TOLERANCE vs the triangle-wave reference — the
-    # jpeg_decode pattern at the audio seam).
-    adpcm_rows = MM.adpcm_roundtrip_check(MM.render_adpcm_payloads(jpeg_docs)).select(
-        F.lit("audio_adpcm").alias("op"),
-        "doc_id", ns.alias("payload_md5"), ns.alias("modality"), "byte_len",
-        F.col("sample_rate").alias("width"), F.col("n_channels").alias("height"),
-        F.col("n_samples").alias("n_frames"),
-        F.col("duration_us").alias("resized_w"), nb.alias("resized_h"),
-        ns.alias("sampled_frames"), nb.alias("maxval"),
-        nb.alias("pixel_sum"), nb.alias("r_sum"), nb.alias("g_sum"), nb.alias("b_sum"),
-        "decode_ok", ns.alias("status"),
-    )
-    # op='video_dib' (round 11): UNCOMPRESSED AVI — raw-RGB DIB frames
-    # through the same RIFF walk (BMP row layout: bottom-up, BGR, 4-byte
-    # padding). Lossless, so unlike video_mjpeg every output is an exact
-    # integer: container bytes, geometry, and per-channel sums over the
-    # sampled frames, all re-derived arithmetically by the oracle.
-    dib_rows = MM.dib_frame_stats(MM.render_dib_payloads(jpeg_docs)).select(
-        F.lit("video_dib").alias("op"),
-        "doc_id", ns.alias("payload_md5"), ns.alias("modality"), "byte_len",
-        "width", "height", "n_frames",
-        nb.alias("resized_w"), nb.alias("resized_h"), "sampled_frames",
-        nb.alias("maxval"),
-        (F.col("r_sum") + F.col("g_sum") + F.col("b_sum")).alias("pixel_sum"),
-        "r_sum", "g_sum", "b_sum",
-        nflag.alias("decode_ok"), ns.alias("status"),
-    )
-    summary_rows = MM.quarantine_summary(q_stats).select(
-        F.lit("quarantine_summary").alias("op"),
-        nb.alias("doc_id"), ns.alias("payload_md5"), ns.alias("modality"),
-        F.col("n_docs").alias("byte_len"),
-        nb.alias("width"), nb.alias("height"), nb.alias("n_frames"),
-        nb.alias("resized_w"), nb.alias("resized_h"), ns.alias("sampled_frames"),
-        nb.alias("maxval"), nb.alias("pixel_sum"),
-        nb.alias("r_sum"), nb.alias("g_sum"), nb.alias("b_sum"),
-        nflag.alias("decode_ok"), "status",
-    )
-    # op='binary_ingest' (round 7, VERDICT r6 item 3): the raw-FILE edge.
-    # Real .ppm files staged once per sf_dir (executor-written, marker-
-    # gated), read back through Spark's binaryFile source, id parsed from
-    # the path, and the BYTES decoded through the same codec seam — so
-    # the driver hash-checks the whole ingest path: listing, glob prune,
-    # byte-complete reads (byte_len), and content (pixel sums).
-    ingest_path = MM.stage_ppm_ingest_dir(jpeg_docs.select("doc_id"), _mm_ingest_dir(sf_dir))
+    parts = [_union_rows("meta_decode", meta.join(MM.fake_decode_meta(with_payload), "doc_id"), meta_slots)]
+    parts += [
+        _union_rows(op, stage(MM.render_payloads(docs if all_docs else sampled, fmt)), slots)
+        for op, fmt, stage, all_docs, slots in MM_BRANCHES
+    ]
+    # binary_ingest: real .ppm files staged once per sf_dir, read back
+    # through Spark's binaryFile source and decoded by the same stage, so
+    # listing, glob prune, byte-complete reads (byte_len) and content are
+    # all hash-checked. Its union place is right after jpeg_decode.
+    ingest_path = MM.stage_ppm_ingest_dir(sampled.select("doc_id"), _mm_ingest_dir(sf_dir))
     parsed = read_binary_dir(spark, ingest_path, glob="*.ppm").select(
         F.regexp_extract("path", r"(\d+)\.ppm$", 1).cast("long").alias("doc_id"),
         F.col("length").cast("long").alias("byte_len"),
-        F.col("content").alias("img"),
+        F.col("content").alias(MM.PAYLOAD_COL),
     )
-    ingest_rows = MM.decode_image_stats(parsed).join(
-        parsed.select("doc_id", "byte_len"), "doc_id"
-    ).select(
-        F.lit("binary_ingest").alias("op"),
-        "doc_id", ns.alias("payload_md5"), ns.alias("modality"), "byte_len",
-        "width", "height", nb.alias("n_frames"),
-        nb.alias("resized_w"), nb.alias("resized_h"), ns.alias("sampled_frames"),
-        "maxval", "pixel_sum", "r_sum", "g_sum", "b_sum",
-        nflag.alias("decode_ok"), ns.alias("status"),
-    )
-    return (
-        meta_rows.unionAll(real_rows)
-        .unionAll(png_rows)
-        .unionAll(jpeg_rows)
-        .unionAll(ingest_rows)
-        .unionAll(quarantine_rows)
-        .unionAll(summary_rows)
-        .unionAll(video_rows)
-        .unionAll(audio_rows)
-        .unionAll(resize_rows)
-        .unionAll(mjpeg_rows)
-        .unionAll(g711_rows)
-        .unionAll(f32_rows)
-        .unionAll(flac_rows)
-        .unionAll(adpcm_rows)
-        .unionAll(dib_rows)
-    )
+    ingest = MM.decode_image_stats(parsed).join(parsed.select("doc_id", "byte_len"), "doc_id")
+    parts.insert(4, _union_rows("binary_ingest", ingest, {**_IMAGE, "byte_len": "byte_len"}))
+    return functools.reduce(DataFrame.unionAll, parts)

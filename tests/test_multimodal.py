@@ -256,7 +256,7 @@ def test_render_decode_pipeline(spark):
     from .conftest import SF_SMOKE
 
     docs = load_table(spark, SF_SMOKE, "documents").limit(20)
-    out = {r["doc_id"]: r for r in MM.decode_image_stats(MM.render_ppm_payloads(docs)).collect()}
+    out = {r["doc_id"]: r for r in MM.decode_image_stats(MM.render_payloads(docs, "ppm")).collect()}
     for doc_id in [r["doc_id"] for r in docs.select("doc_id").collect()]:
         w, h = MM._fixture_dims(doc_id)
         px = MM._fixture_pixels(doc_id, w, h).astype(np.int64)
@@ -292,7 +292,7 @@ def test_binary_dir_ingest_matches_column_route(spark, tmp_path):
     assert files.count() == 6  # the .txt is pruned by the glob, not decoded
     ingested = files.select(
         F.regexp_extract("path", r"img_(\d+)\.ppm$", 1).cast("long").alias("doc_id"),
-        F.col("content").alias("img"),
+        F.col("content").alias("payload"),
     )
     out = {r["doc_id"]: r for r in MM.decode_image_stats(ingested).collect()}
     assert set(out) == set(want)
@@ -376,7 +376,7 @@ def test_safe_decode_quarantines_bad_payloads_without_killing_job(spark):
     non-empty error message. Strict mode on the same batch raises."""
     ids = [(i,) for i in (0, 10, 20, 30, 40, 60, 70)]  # 0/30/60 planted bad
     docs = spark.createDataFrame(ids, "doc_id long")
-    rendered = MM.render_quarantine_payloads(docs)
+    rendered = MM.render_payloads(docs, "quarantine")
     rows = {r["doc_id"]: r for r in MM.decode_image_stats(rendered, safe=True).collect()}
     assert len(rows) == 7  # every payload produced a row — nothing dropped
     assert rows[0]["status"] == "quarantined:ValueError"  # truncated PPM
@@ -404,7 +404,7 @@ def test_quarantine_summary_rollup(spark):
     and shares must reconcile exactly with the planted failure classes."""
     ids = [(i,) for i in (0, 10, 20, 30, 40, 60, 70)]  # 0/30/60 planted bad
     docs = spark.createDataFrame(ids, "doc_id long")
-    stats = MM.decode_image_stats(MM.render_quarantine_payloads(docs), safe=True)
+    stats = MM.decode_image_stats(MM.render_payloads(docs, "quarantine"), safe=True)
     rows = {r["status"]: r for r in MM.quarantine_summary(stats).collect()}
     assert set(rows) == {"ok", "quarantined:ValueError", "quarantined:NotImplementedError"}
     assert rows["ok"]["n_docs"] == 4
@@ -445,7 +445,7 @@ def test_pillow_adapter_decodes_what_native_quarantines(spark):
     # native: quarantined (unknown magic); pillow: decoded
     d = MM.decode_image_pillow(gif)
     assert (d["width"], d["height"]) == (5, 4)
-    df = spark.createDataFrame([(1, bytearray(gif))], "doc_id long, img binary")
+    df = spark.createDataFrame([(1, bytearray(gif))], "doc_id long, payload binary")
     native = MM.decode_image_stats(df, safe=True).collect()[0]
     assert native["status"].startswith("quarantined:")
     via_pil = MM.decode_image_stats(df, safe=True, decode_backend="pillow").collect()[0]
@@ -460,7 +460,7 @@ def test_pillow_backend_missing_fails_loudly_at_build_time(spark):
     """Without Pillow, asking for the pillow backend must fail ON THE
     DRIVER at operator-build time with a clear ImportError — not decode
     every image into quarantined:ImportError rows executor-side."""
-    df = spark.createDataFrame([(1, bytearray(b"P6"))], "doc_id long, img binary")
+    df = spark.createDataFrame([(1, bytearray(b"P6"))], "doc_id long, payload binary")
     with pytest.raises(ImportError, match="Pillow"):
         MM.decode_image_stats(df, safe=True, decode_backend="pillow")
     with pytest.raises(ValueError, match="decode_backend"):
@@ -514,7 +514,7 @@ def test_resize_nn_kernel_and_stats(spark):
     docs = spark.createDataFrame([(i,) for i in ids], "doc_id long")
     rows = {
         r["doc_id"]: r
-        for r in MM.resized_image_stats(MM.render_ppm_payloads(docs), box=8).collect()
+        for r in MM.resized_image_stats(MM.render_payloads(docs, "ppm")).collect()
     }
     for i in ids:
         w, h = MM._fixture_dims(i)
@@ -575,7 +575,7 @@ def test_audio_features_exact(spark):
     per-channel sums (ch1 NULL for mono), L1 energy."""
     ids = [0, 1, 10, 37]  # mixes mono (even) and stereo (odd)... geom: ch = 1 + id % 2
     docs = spark.createDataFrame([(i,) for i in ids], "doc_id long")
-    rows = {r["doc_id"]: r for r in MM.audio_features(MM.render_wav_payloads(docs)).collect()}
+    rows = {r["doc_id"]: r for r in MM.audio_features(MM.render_payloads(docs, "wav")).collect()}
     for i in ids:
         rate, ch, n = MM._wav_fixture_geom(i)
         s = MM._wav_fixture_samples(i, ch, n).astype("int64")
@@ -602,7 +602,7 @@ def test_av_safe_mode_quarantines_bad_containers(spark):
     wavs = spark.createDataFrame(
         [(1, bytearray(good_wav)), (2, bytearray(bytes(mp3_wav))),
          (3, bytearray(good_wav[:-3])), (4, bytearray(b"OggS" + b"\0" * 40))],
-        "doc_id long, audio binary",
+        "doc_id long, payload binary",
     )
     rows = {r["doc_id"]: r for r in MM.audio_features(wavs, safe=True).collect()}
     assert rows[1]["status"] == "ok" and rows[1]["abs_sum"] is not None
@@ -623,7 +623,7 @@ def test_av_safe_mode_quarantines_bad_containers(spark):
     vids = spark.createDataFrame(
         [(1, bytearray(good_y4m)), (2, bytearray(c420)),
          (3, bytearray(good_y4m[:-1])), (4, bytearray(b"RIFF" + b"\0" * 20))],
-        "doc_id long, video binary",
+        "doc_id long, payload binary",
     )
     vrows = {r["doc_id"]: r for r in MM.video_frame_stats(vids, safe=True).collect()}
     assert vrows[1]["status"] == "ok" and vrows[1]["y_sum"] is not None
@@ -642,7 +642,7 @@ def test_video_frame_stats_samples_and_sums(spark):
     docs = spark.createDataFrame([(i,) for i in ids], "doc_id long")
     rows = {
         r["doc_id"]: r
-        for r in MM.video_frame_stats(MM.render_y4m_payloads(docs)).collect()
+        for r in MM.video_frame_stats(MM.render_payloads(docs, "y4m")).collect()
     }
     assert set(rows) == set(ids)
     for i in ids:
@@ -1017,7 +1017,7 @@ def test_dib_avi_native_decode_and_stage(spark):
 
     ids = [0, 3, 10, 37]
     docs = spark.createDataFrame([(i,) for i in ids], "doc_id long")
-    rows = {r.doc_id: r for r in MM.dib_frame_stats(MM.render_dib_payloads(docs)).collect()}
+    rows = {r.doc_id: r for r in MM.dib_frame_stats(MM.render_payloads(docs, "dib")).collect()}
     assert set(rows) == set(ids)
     for i in ids:
         w, h, n = MM._mjpeg_fixture_geom(i)
@@ -1038,7 +1038,7 @@ def test_dib_avi_native_decode_and_stage(spark):
         w, h, [MM.encode_jpeg(w, h, frames[f]) for f in range(n)]
     ).replace(b"MJPG", b"H264")
     vdf = spark.createDataFrame(
-        [(3, bytearray(good)), (4, bytearray(h264))], "doc_id long, video binary"
+        [(3, bytearray(good)), (4, bytearray(h264))], "doc_id long, payload binary"
     )
     vrows = {r.doc_id: r for r in MM.dib_frame_stats(vdf, safe=True).collect()}
     assert vrows[3].status == "ok" and vrows[3].r_sum is not None
@@ -1055,7 +1055,7 @@ def test_mjpeg_frame_check_and_safe_quarantine(spark):
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import multimodal as MM
 
     ids = spark.createDataFrame([(i * 10,) for i in range(6)], "doc_id long")
-    rendered = MM.render_avi_payloads(ids)
+    rendered = MM.render_payloads(ids, "avi_mjpeg")
     strict = {r.doc_id: r for r in MM.mjpeg_frame_check(rendered).collect()}
     assert len(strict) == 6
     for d, r in strict.items():
@@ -1066,10 +1066,10 @@ def test_mjpeg_frame_check_and_safe_quarantine(spark):
 
     # plant one non-MJPEG stream (doc 0): fourcc swapped to H264
     planted = rendered.withColumn(
-        "video",
+        "payload",
         F.when(F.col("doc_id") == 0,
-               F.udf(lambda b: bytes(b).replace(b"MJPG", b"H264"), "binary")("video")
-        ).otherwise(F.col("video")),
+               F.udf(lambda b: bytes(b).replace(b"MJPG", b"H264"), "binary")("payload")
+        ).otherwise(F.col("payload")),
     )
     rows = {r.doc_id: r for r in MM.mjpeg_frame_check(planted, safe=True).collect()}
     assert rows[0].status == "quarantined:NotImplementedError" and rows[0].decode_ok is None
@@ -1078,14 +1078,17 @@ def test_mjpeg_frame_check_and_safe_quarantine(spark):
         assert (rows[d].width, rows[d].n_frames) == (strict[d].width, strict[d].n_frames)
 
 
-def test_safe_decode_importerror_escapes_quarantine(spark):
+@pytest.mark.parametrize("stage", ["image", "video"])
+def test_safe_decode_importerror_escapes_quarantine(spark, stage):
     """ADVICE r9: an executor-side missing decode library is an
     ENVIRONMENT defect, not a payload defect — safe=True must not
-    swallow it as a sea of 'quarantined:ImportError' rows. Patch the
-    backend resolver to a function that raises ImportError (simulating
-    Pillow present on the driver, absent on executors) and assert the
-    stage FAILS with the ImportError surfaced, instead of completing
-    with quarantine rows."""
+    swallow it as a sea of 'quarantined:ImportError' rows. Swap the
+    decoder the stage looks up on the driver at build time for one
+    that raises ImportError (simulating the library present on the
+    driver, absent on executors) and assert the stage FAILS with the
+    ImportError surfaced, instead of completing with quarantine rows:
+    the image stage through its backend resolver, the video stage
+    through its ``decode_y4m`` lookup."""
     from unittest import mock
 
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import multimodal as MM
@@ -1094,9 +1097,14 @@ def test_safe_decode_importerror_escapes_quarantine(spark):
         raise ImportError("No module named 'PIL' (executor)")
 
     ids = spark.createDataFrame([(0,)], "doc_id long")
-    rendered = MM.render_ppm_payloads(ids)
-    with mock.patch.object(MM, "_resolve_decode_backend", return_value=missing_backend):
-        df = MM.decode_image_stats(rendered, safe=True, decode_backend="pillow")
+    if stage == "image":
+        rendered = MM.render_payloads(ids, "ppm")
+        with mock.patch.object(MM, "_resolve_decode_backend", return_value=missing_backend):
+            df = MM.decode_image_stats(rendered, safe=True, decode_backend="pillow")
+    else:
+        rendered = MM.render_payloads(ids, "y4m")
+        with mock.patch.object(MM, "decode_y4m", missing_backend):
+            df = MM.video_frame_stats(rendered, safe=True)
     import pytest as _pytest
 
     with _pytest.raises(Exception, match="ImportError|No module named"):
@@ -1193,7 +1201,7 @@ def test_av_compressed_fixtures_quarantine_natively(spark):
          (3, bytearray(MM.encode_wav_alaw(8000, xs))),
          (4, bytearray(MM.encode_wav_ulaw(8000, xs))),
          (5, bytearray(f32_wav)), (6, bytearray(adpcm_wav))],
-        "doc_id long, audio binary",
+        "doc_id long, payload binary",
     )
     arows = {r.doc_id: r for r in MM.audio_features(adf, safe=True).collect()}
     assert arows[1].status == "quarantined:NotImplementedError"
@@ -1204,7 +1212,7 @@ def test_av_compressed_fixtures_quarantine_natively(spark):
     assert arows[6].status == "ok" and arows[6].n_samples == 40
     vdf = spark.createDataFrame(
         [(1, bytearray(h264_avi)), (2, bytearray(good_avi)), (3, bytearray(raw_avi))],
-        "doc_id long, video binary",
+        "doc_id long, payload binary",
     )
     vrows = {r.doc_id: r for r in MM.mjpeg_frame_check(vdf, safe=True).collect()}
     assert vrows[1].status == "quarantined:NotImplementedError"
@@ -1285,7 +1293,7 @@ def test_ffmpeg_adapter_cross_checks_native_decoders(spark):
         assert abs(out_m.shape[0] - x.shape[0]) < 3000  # codec delay padding
 
     df = spark.createDataFrame([(1, bytearray(MM.encode_wav_alaw(8000, x)))],
-                               "doc_id long, audio binary")
+                               "doc_id long, payload binary")
     row = MM.audio_features(df, decode_backend="ffmpeg").collect()[0]
     assert row.sample_rate == 8000 and row.n_channels == 2 and row.n_samples == 2000
 
@@ -1295,7 +1303,7 @@ def test_ffmpeg_backend_missing_fails_loudly_at_build_time(spark):
     """Without ffmpeg, decode_backend='ffmpeg' must fail ON THE DRIVER
     at operator-build time with a clear ImportError — never as per-row
     quarantined:ImportError rows executor-side."""
-    df = spark.createDataFrame([(1, bytearray(b"RIFF"))], "doc_id long, audio binary")
+    df = spark.createDataFrame([(1, bytearray(b"RIFF"))], "doc_id long, payload binary")
     with pytest.raises(ImportError, match="ffmpeg"):
         MM.audio_features(df, safe=True, decode_backend="ffmpeg")
     with pytest.raises(ValueError, match="decode_backend"):
@@ -1745,7 +1753,26 @@ def test_decode_image_stats_auto_equals_native_without_adapter(spark):
 
         _pytest.skip("adapter present — covered by the bit-for-bit cross-check")
     docs = load_table(spark, SF_SMOKE, "documents").limit(12)
-    rendered = MM.render_ppm_payloads(docs)
+    rendered = MM.render_payloads(docs, "ppm")
     native = sorted(map(tuple, MM.decode_image_stats(rendered).collect()))
     auto = sorted(map(tuple, MM.decode_image_stats(rendered, decode_backend="auto").collect()))
     assert native == auto
+
+
+def test_mm_suite_plan_shape(spark):
+    """mm_suite's physical plan at sf0.01: one MapInPandas per render and
+    per decode stage of every branch (30 — the quarantine render+decode
+    is planned twice, once under the summary rollup), a single shuffle
+    (the quarantine_summary groupBy) and two broadcasts (the meta_decode
+    and binary_ingest joins). Counted as unique node ids, as the
+    headline plan ceilings are."""
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries import QUERIES
+
+    from .conftest import SF_CORRECT
+    from .test_plans import _unique_nodes
+
+    df = QUERIES["mm_suite"](spark, SF_CORRECT)
+    plan = spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    assert _unique_nodes(plan, "MapInPandas") == 30
+    assert _unique_nodes(plan, "Exchange") <= 1
+    assert _unique_nodes(plan, "BroadcastExchange") <= 2

@@ -427,7 +427,7 @@ def test_streaming_media_ingest_decode_and_quarantine_rollup(spark, tmp_path):
     ids = [(i,) for i in (0, 10, 20, 30, 40, 60, 70)]  # 0/30/60 planted bad
     docs = spark.createDataFrame(ids, "doc_id long")
     staged = str(tmp_path / "media")
-    MM.render_quarantine_payloads(docs).coalesce(1).write.parquet(staged)
+    MM.render_payloads(docs, "quarantine").coalesce(1).write.parquet(staged)
 
     batch_stats = MM.decode_image_stats(spark.read.parquet(staged), safe=True)
     batch_rows = {tuple(r) for r in batch_stats.collect()}
@@ -676,11 +676,11 @@ def test_streaming_mjpeg_video_ingest(spark, tmp_path):
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import multimodal as MM
 
     docs = spark.createDataFrame([(i,) for i in (0, 10, 20, 30)], "doc_id long")
-    rendered = MM.render_avi_payloads(docs).withColumn(
-        "video",
+    rendered = MM.render_payloads(docs, "avi_mjpeg").withColumn(
+        "payload",
         F.when(F.col("doc_id") == 20,
-               F.udf(lambda b: bytes(b).replace(b"MJPG", b"H264"), "binary")("video")
-        ).otherwise(F.col("video")),
+               F.udf(lambda b: bytes(b).replace(b"MJPG", b"H264"), "binary")("payload")
+        ).otherwise(F.col("payload")),
     )
     staged = str(tmp_path / "avis")
     rendered.coalesce(1).write.parquet(staged)

@@ -68,7 +68,7 @@ def main() -> None:
     ]
     path = os.path.join(".scratch", "decode_auto_ab")
     shutil.rmtree(path, ignore_errors=True)
-    df = spark.createDataFrame(rows, "doc_id long, img binary").repartition(32)
+    df = spark.createDataFrame(rows, "doc_id long, payload binary").repartition(32)
     df.write.parquet(path)
     staged = spark.read.parquet(path)
     payload_mb = sum(len(p) for p in payloads) * DUP / 1e6
@@ -80,7 +80,7 @@ def main() -> None:
     for rep in range(a.reps):
         for backend in ("native", "auto"):
             t0 = time.perf_counter()
-            out = MM.decode_image_stats(staged, img_col="img", decode_backend=backend)
+            out = MM.decode_image_stats(staged, decode_backend=backend)
             agg = out.groupBy().sum("pixel_sum").collect()[0][0]
             dt = time.perf_counter() - t0
             times[backend].append(round(dt, 3))

@@ -38,46 +38,26 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 
-def branches(MM):
-    """(name, renderer, decode-stage, payload column, full-docs?) — the
-    same stage compositions and doc subsets mm_suite runs."""
-    return [
-        ("real_decode", MM.render_ppm_payloads, lambda d: MM.decode_image_stats(d), "img", True),
-        ("png_decode", MM.render_png_payloads, lambda d: MM.decode_image_stats(d), "img", True),
-        ("jpeg_decode", MM.render_jpeg_payloads, MM.decode_jpeg_check, "img", False),
-        ("image_resize", MM.render_ppm_payloads, lambda d: MM.resized_image_stats(d, box=8), "img", True),
-        ("video_y4m", MM.render_y4m_payloads, MM.video_frame_stats, "video", False),
-        ("video_mjpeg", MM.render_avi_payloads, MM.mjpeg_frame_check, "video", False),
-        ("video_dib", MM.render_dib_payloads, MM.dib_frame_stats, "video", False),
-        ("audio_wav", MM.render_pcm_variant_payloads, MM.audio_features, "audio", False),
-        ("audio_g711", MM.render_g711_payloads, MM.audio_features, "audio", False),
-        ("audio_f32", MM.render_f32_payloads, MM.audio_features, "audio", False),
-        ("audio_adpcm", MM.render_adpcm_payloads, MM.adpcm_roundtrip_check, "audio", False),
-        ("audio_flac", MM.render_flac_payloads, MM.audio_features, "audio", False),
-        ("quarantine", MM.render_quarantine_payloads,
-         lambda d: MM.decode_image_stats(d, safe=True), "img", False),
-    ]
-
-
 def throughput_phase(spark, sf_dir: str, cpus: int, stage_root: str) -> list[dict]:
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import multimodal as MM
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries.similarity_q import MM_BRANCHES
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources import load_table
     from tools.scale_run import session_hygiene
 
     docs = load_table(spark, sf_dir, "documents")
     jpeg_docs = docs.where(F.col("doc_id") % 10 == 0)
     out = []
-    for name, render, decode, col, full in branches(MM):
+    for name, fmt, decode, full, _slots in MM_BRANCHES:
         path = os.path.join(stage_root, name)
         if not os.path.exists(os.path.join(path, "_SUCCESS")):
             t0 = time.perf_counter()
-            render(docs if full else jpeg_docs).write.mode("overwrite").parquet(path)
+            MM.render_payloads(docs if full else jpeg_docs, fmt).write.mode("overwrite").parquet(path)
             render_sec = round(time.perf_counter() - t0, 2)
         else:
             render_sec = None  # staged by an earlier run
         staged = spark.read.parquet(path)
         stats = staged.agg(
-            F.count(F.lit(1)).alias("n"), F.sum(F.length(col)).alias("bytes")
+            F.count(F.lit(1)).alias("n"), F.sum(F.length(MM.PAYLOAD_COL)).alias("bytes")
         ).first()
         n_docs, payload_bytes = int(stats.n), int(stats.bytes)
         n_parts = staged.rdd.getNumPartitions()
@@ -111,7 +91,7 @@ def quarantine_phase(spark, sf_dir: str) -> dict:
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources import load_table
 
     docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") % 10 == 0)
-    q = MM.decode_image_stats(MM.render_quarantine_payloads(docs), safe=True)
+    q = MM.decode_image_stats(MM.render_payloads(docs, "quarantine"), safe=True)
     rows = MM.quarantine_summary(q).collect()
     total = sum(r.n_docs for r in rows)
     return {
