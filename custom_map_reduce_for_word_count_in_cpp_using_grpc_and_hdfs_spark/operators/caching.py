@@ -47,8 +47,8 @@ _EXPANSION_BOUND = 32
 
 def _size_proof(
     df: DataFrame, expansion_bound: int = _EXPANSION_BOUND
-) -> tuple[bool, bool, list | None]:
-    """(mis-plan risk, proof of smallness, source file sizes).
+) -> tuple[bool, bool, int | None]:
+    """(mis-plan risk, proof of smallness, source file bytes).
 
     The two booleans answer DIFFERENT questions (round-8 fix — they were
     conflated as one flag, see below):
@@ -76,7 +76,7 @@ def _size_proof(
     guarantee is only as strong as the bound: it holds for every
     cached-bytes-per-source-byte ratio the engine has measured, not for
     arbitrary shapes."""
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import _as_bytes, scan_file_sizes
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import _as_bytes, scan_bytes
 
     try:
         threshold = _as_bytes(df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold"))
@@ -84,17 +84,11 @@ def _size_proof(
         return True, False, None
     if threshold <= 0:  # auto-broadcast disabled: nothing to mis-plan, nothing proven
         return False, False, None
-    sizes = scan_file_sizes(df)
-    if sizes is None:
+    nbytes = scan_bytes(df)
+    if nbytes is None:
         return True, False, None
-    proven = sum(sizes) * expansion_bound < threshold
-    return not proven, proven, sizes
-
-
-def _broadcast_risk(df: DataFrame, expansion_bound: int = _EXPANSION_BOUND) -> bool:
-    """Mis-plan risk component of :func:`_size_proof` (kept as the
-    stable name the tests and docs cite)."""
-    return _size_proof(df, expansion_bound)[0]
+    proven = nbytes * expansion_bound < threshold
+    return not proven, proven, nbytes
 
 
 def eager_stats(df: DataFrame, expansion_bound: int = _EXPANSION_BOUND) -> DataFrame:
@@ -105,7 +99,7 @@ def eager_stats(df: DataFrame, expansion_bound: int = _EXPANSION_BOUND) -> DataF
     small SF, measured round 5), so it runs only when it can change a
     decision: when the source scan is big enough — or unsizeable — that
     the true cached size could cross the broadcast threshold at
-    ``expansion_bound``× growth (:func:`_broadcast_risk`; pass a
+    ``expansion_bound``× growth (:func:`_size_proof`; pass a
     shape-specific bound when the default's measured ceiling doesn't
     cover the caller's expansion). Small sources keep the lazy persist
     and their (correct) broadcast plans; the sf0.1 driver bench takes
@@ -135,13 +129,13 @@ def eager_stats(df: DataFrame, expansion_bound: int = _EXPANSION_BOUND) -> DataF
     Order matters (round-7 fix): the risk check runs BEFORE ``persist()``.
     Once the plan is registered with the CacheManager, the memoized
     optimized plan substitutes an ``InMemoryRelation`` for the file scan,
-    ``inputFiles()`` returns empty, and ``scan_file_sizes`` reports
+    the scan's file listing comes back empty, and ``scan_bytes`` reports
     "unsizeable" — which the risk check conservatively treats as risky,
     silently degrading the gate to always-eager (the pre-fix behavior:
     correct plans, but the ~1.5 s count job ran even for provably-small
     sources unless the caller happened to have analyzed the frame first).
     """
-    risky, proven, sizes = _size_proof(df, expansion_bound)
+    risky, proven, nbytes = _size_proof(df, expansion_bound)
     df = df.persist()
     if risky:
         df.count()
@@ -150,7 +144,7 @@ def eager_stats(df: DataFrame, expansion_bound: int = _EXPANSION_BOUND) -> DataF
             "eager_stats: lazy persist (source %s bytes x bound %s under the "
             "broadcast threshold) — if this relation later mis-broadcasts, "
             "raise expansion_bound at this call site",
-            sum(sizes) if sizes else "?",
+            nbytes,
             expansion_bound,
         )
     else:

@@ -927,29 +927,21 @@ def simhash_near_dups(
     Geometry comes from :func:`simhash_block_geometry` sized by
     ``corpus_size``; when neither ``n_blocks`` nor ``corpus_size`` is
     given, the corpus is counted only if the scan's file bytes say the
-    default shape could go quadratic (>16 MB — the same provable-risk
-    gating as caching.eager_stats, so small-SF benches never pay the
-    count job)."""
+    default shape could go quadratic (>16 MB), so small-SF benches never
+    pay the count. Both statistics come from the input-statistics seam
+    in plans/parallelism.py (``scan_bytes``, ``row_count``)."""
     from itertools import combinations
 
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import scan_file_sizes
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import row_count, scan_bytes
 
     d = max_distance
     if n_blocks is None:
         if corpus_size is None:
-            sizes = scan_file_sizes(df)
-            if sizes is not None and sum(sizes) <= 16 * 1024 * 1024:
+            nbytes = scan_bytes(df)
+            if nbytes is not None and nbytes <= 16 * 1024 * 1024:
                 n_blocks = d + 1  # provably-safe small corpus: skip the count
             else:
-                # zero-job EXACT footer count on a bare row-preserving
-                # scan (round 14, plans/parallelism.scan_row_count);
-                # filtered/derived frames run the count job as before —
-                # the geometry needs the exact n either way
-                from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import scan_row_count
-
-                corpus_size = scan_row_count(df)
-                if corpus_size is None:
-                    corpus_size = df.count()
+                corpus_size = row_count(df)
         if n_blocks is None:
             n_blocks = simhash_block_geometry(corpus_size, d)
     # persisted: both join sides and all combination projections read the

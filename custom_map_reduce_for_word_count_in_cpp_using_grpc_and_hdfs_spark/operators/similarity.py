@@ -343,10 +343,11 @@ def cosine_near_dup_pairs(
     parity on planted dups is asserted in tests/test_dedup_similarity.py.
 
     Band geometry defaults to :func:`lsh_band_geometry` sized from the
-    corpus count (pass ``corpus_size`` when it is already known to skip
-    the count job; pass explicit ``n_planes``/``bands`` to pin a stored
-    layout's geometry). Two 100 TB design rules are baked into the plan
-    shape:
+    exact corpus row count of the input-statistics seam
+    (``plans/parallelism.row_count``: parquet footers, else a count job;
+    pass ``corpus_size`` when it is already known to skip it; pass
+    explicit ``n_planes``/``bands`` to pin a stored layout's geometry).
+    Two 100 TB design rules are baked into the plan shape:
 
     - the heavy vector column NEVER rides the band explode: candidate
       generation shuffles compact (vid, codes, band, code) rows, and the
@@ -359,17 +360,11 @@ def cosine_near_dup_pairs(
     if bands is None or n_planes is None:
         n = corpus_size
         if n is None:
-            # zero-job EXACT count from parquet footers when the frame is
-            # provably a bare row-preserving scan (round 14 — the same
-            # metadata-decision discipline as the pipeline bytes gate,
-            # but exact, because geometry flips on ceil(log2 n) and a
-            # changed geometry changes candidate sets); filtered/derived
-            # frames fall back to the count job, semantics identical
-            from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import scan_row_count
+            # exact, because geometry flips on ceil(log2 n) and a changed
+            # geometry changes candidate sets
+            from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import row_count
 
-            n = scan_row_count(df)
-        if n is None:
-            n = df.count()
+            n = row_count(df)
         bands, width = lsh_band_geometry(n, threshold)
         n_planes = bands * width
     planes = hyperplanes(dim, n_planes)
@@ -1020,8 +1015,8 @@ def auto_ivf_topk(
 ):
     """Cost-aware IVF top-k — the fourth measured-crossover default on
     the shared ``plans/cost.py`` seam (after edge route, skew salting,
-    state store). Measures the corpus size (one metadata-cheap count)
-    and routes:
+    state store). Measures the corpus size (``row_count``: zero jobs on a
+    bare parquet scan) and routes:
 
     - ``live`` (≤ crossover): in-plan Lloyd training at k=16 + in-plan
       bucket assignment (:func:`ivf_centroids` + :func:`ivf_topk`) —
@@ -1038,8 +1033,9 @@ def auto_ivf_topk(
     Returns ``(topk_df, CostDecision)`` so callers and tests can audit
     the route, same as the other cost-aware seams."""
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.cost import decide_crossover
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import row_count
 
-    n = corpus.count()
+    n = row_count(corpus)
     decision = decide_crossover(
         float(n),
         float(crossover),

@@ -34,7 +34,7 @@ regression, VERDICT.md §perf):
 2. **No ``df.rdd`` probe.** Converting the plan to an RDD to count
    partitions forces full physical planning per call site and bypasses
    AQE statistics. The split count is instead *estimated* from the
-   scan's input files (``df.inputFiles()`` — logical analysis only)
+   scan's input file listing (logical analysis only)
    using Spark's own split-packing formula; non-local files (hdfs://,
    s3://) short-circuit to "assume production layout" — which is the
    correct at-scale answer and costs nothing.
@@ -69,28 +69,47 @@ def _as_bytes(v: str) -> int:
     return int(float(s) * mult)
 
 
-def scan_file_sizes(df: DataFrame) -> list[int] | None:
-    """Byte sizes of the local files behind ``df``'s scan, or ``None``
-    when they cannot be cheaply sized (non-local scheme, non-file source,
-    empty listing). This is the ACCURATE pre-explode size — unlike
-    Catalyst's post-``Generate`` estimate, file bytes never lie."""
+def _local_files(df: DataFrame) -> list[str] | None:
+    """Local paths of the files behind ``df``'s scan (logical analysis
+    only, zero jobs), or ``None`` when the listing fails, is empty, or
+    names a non-local scheme (hdfs://, s3://). A directory-layout table
+    lists its part files, so every statistic below sees the same files
+    for a single-file and a partitioned source."""
     try:
         files = df.inputFiles()
     except Exception:
         return None
     if not files:
         return None
-    sizes = []
+    paths = []
     for uri in files:
         parsed = urlparse(uri)
         if parsed.scheme not in ("file", ""):
             return None
-        path = unquote(parsed.path or uri)
-        try:
-            sizes.append(os.path.getsize(path))
-        except OSError:
-            return None
-    return sizes
+        paths.append(unquote(parsed.path or uri))
+    return paths
+
+
+def scan_file_sizes(df: DataFrame) -> list[int] | None:
+    """Byte sizes of the local files behind ``df``'s scan, or ``None``
+    when they cannot be cheaply sized (non-local scheme, non-file source,
+    empty listing). This is the ACCURATE pre-explode size — unlike
+    Catalyst's post-``Generate`` estimate, file bytes never lie."""
+    paths = _local_files(df)
+    if paths is None:
+        return None
+    try:
+        return [os.path.getsize(p) for p in paths]
+    except OSError:
+        return None
+
+
+def scan_bytes(df: DataFrame) -> int | None:
+    """Total bytes of the local files behind ``df``'s scan, or ``None``
+    when :func:`scan_file_sizes` cannot size them. The one input-size
+    statistic every bytes gate compares against its own bound."""
+    sizes = scan_file_sizes(df)
+    return None if sizes is None else sum(sizes)
 
 
 #: Analyzed-plan node names that preserve the scan's row count 1:1.
@@ -116,22 +135,9 @@ def scan_row_count(df: DataFrame) -> int | None:
     Project/SubqueryAlias/Relation — Filter/Join/Generate/Sample/Limit
     or any UNKNOWN node name returns None, so new operators fail toward
     the correct (job-based) path, never toward a wrong count."""
-    files = None
-    try:
-        files = df.inputFiles()
-    except Exception:
+    paths = _local_files(df)
+    if paths is None or not all(p.endswith(".parquet") for p in paths):
         return None
-    if not files:
-        return None
-    paths = []
-    for uri in files:
-        parsed = urlparse(uri)
-        if parsed.scheme not in ("file", ""):
-            return None
-        path = unquote(parsed.path or uri)
-        if not path.endswith(".parquet"):
-            return None
-        paths.append(path)
     import contextlib
     import io
     import re
@@ -161,6 +167,15 @@ def scan_row_count(df: DataFrame) -> int | None:
         return sum(pq.ParquetFile(p).metadata.num_rows for p in paths)
     except Exception:
         return None
+
+
+def row_count(df: DataFrame) -> int:
+    """EXACT row count of ``df`` for a sizing decision: the zero-job
+    footer count from :func:`scan_row_count` when it can prove one, else
+    a ``count()`` job. Either way the value is identical, so a decision
+    sized from it cannot move with the path taken."""
+    n = scan_row_count(df)
+    return df.count() if n is None else n
 
 
 def scan_splits(df: DataFrame) -> int:

@@ -219,9 +219,10 @@ def choose_edge_method(docs: DataFrame, text_col: str = "text", n: int = 3) -> s
     scan's file bytes prove the posting estimate cannot reach the
     crossover even at EDGE_AUTO_BYTES_EXPANSION_BOUND× text expansion
     (postings ≤ chars ≤ bytes × bound), the jaccard side is decided from
-    metadata alone — the same file-bytes gating as caching.eager_stats
-    and the simhash geometry count. Unsizeable scans (remote schemes,
-    non-file sources) skip the gate and measure, as before.
+    metadata alone. Scan bytes and the doc count come from the
+    input-statistics seam in plans/parallelism.py (``scan_bytes``,
+    ``row_count``). Unsizeable scans (remote schemes, non-file sources)
+    skip the gate and measure, as before.
 
     Single-scan assumption (ADVICE r13): the bytes bound holds when
     ``docs``'s rows come from the scanned files roughly once — a
@@ -231,32 +232,24 @@ def choose_edge_method(docs: DataFrame, text_col: str = "text", n: int = 3) -> s
     exact side is oracle-identical) and bounded (the gate fires only
     under crossover/bound ≈ 937 KB of scan bytes), so the gate stays a
     bytes check rather than also proving the plan is a bare scan."""
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import (
-        scan_file_sizes,
-        scan_row_count,
-    )
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import row_count, scan_bytes
 
-    sizes = scan_file_sizes(docs)
-    if sizes is not None and sum(sizes) * EDGE_AUTO_BYTES_EXPANSION_BOUND <= EDGE_AUTO_CROSSOVER_POSTINGS:
+    nbytes = scan_bytes(docs)
+    if nbytes is not None and nbytes * EDGE_AUTO_BYTES_EXPANSION_BOUND <= EDGE_AUTO_CROSSOVER_POSTINGS:
         # the gate condition IS the below-crossover decision ('jaccard'
         # unconditionally inside this branch), so one audit line carries
         # all the evidence — the round-13 shape additionally ran
         # decide_crossover, logging the same stat/crossover/detail twice
         # per pipeline run (ADVICE r13)
-        bound = sum(sizes) * EDGE_AUTO_BYTES_EXPANSION_BOUND
+        bound = nbytes * EDGE_AUTO_BYTES_EXPANSION_BOUND
         _LOG.info(
             "edge route auto-selected %r from scan bytes alone: %d bytes x %d "
             "bound = %d posting upper bound vs crossover %d (zero decision jobs)",
-            "jaccard", sum(sizes), EDGE_AUTO_BYTES_EXPANSION_BOUND, bound,
+            "jaccard", nbytes, EDGE_AUTO_BYTES_EXPANSION_BOUND, bound,
             EDGE_AUTO_CROSSOVER_POSTINGS,
         )
         return "jaccard"
-    # zero-job EXACT footer count where the frame is a bare
-    # row-preserving scan (round 14); the decision statistics are
-    # identical to the count job's, so the routes cannot move
-    n_docs = scan_row_count(docs)
-    if n_docs is None:
-        n_docs = docs.count()
+    n_docs = row_count(docs)
     if n_docs > EDGE_AUTO_CROSSOVER_POSTINGS * EDGE_AUTO_COUNT_ONLY_MARGIN:
         method, _ = _decide_edge_method(n_docs, 1.0)  # count alone decides
         return method

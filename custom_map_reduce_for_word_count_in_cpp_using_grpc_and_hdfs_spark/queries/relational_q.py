@@ -597,8 +597,10 @@ def rel_sketch_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # blow the 1% bound already at sf0.1's 15k keys). The count is one
     # tiny distinct-agg job; at production scale you'd size from table
     # stats instead.
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import row_count
+
     members = o.select(F.col("o_custkey").alias("key")).distinct()
-    n_keys = members.count()
+    n_keys = row_count(members)
     num_bits, num_hashes = max(1 << 16, 1 << (32 * n_keys).bit_length()), 4
     positions = sk.bloom_build(members, "key", num_bits, num_hashes)
     true_members = (

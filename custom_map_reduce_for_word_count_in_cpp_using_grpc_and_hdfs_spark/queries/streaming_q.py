@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries import query
+from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources import load_table
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.streaming import (
     events_stream,
     run_available_now,
@@ -53,7 +54,7 @@ def stream_window_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             (tumbling_counts(events_stream(spark, sf_dir)), "complete"),
             (sliding_counts(events_stream(spark, sf_dir)), "complete"),
         ],
-        shuffle_width=stream_shuffle_width(sf_dir, "events"),
+        shuffle_width=stream_shuffle_width(load_table(spark, sf_dir, "events")),
     )
     tumbling = tumbling_raw.select(
         F.lit("tumbling").alias("kind"), "ws", "event_type", "n", "sum_value"
@@ -97,7 +98,7 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(
         session_windows(events_stream(spark, sf_dir)),
         "complete",
-        shuffle_width=stream_shuffle_width(sf_dir, "events"),
+        shuffle_width=stream_shuffle_width(load_table(spark, sf_dir, "events")),
     )
 
 
@@ -171,7 +172,6 @@ def stream_dedup_state_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
       pre-filter (operators/sketch.py) cuts the stream first.
     """
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.functions.hashing import poly_hash_chars
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources import load_table
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.streaming.stateful import user_activity_state
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.streaming.windows import (
         click_purchase_join,
@@ -192,9 +192,9 @@ def stream_dedup_state_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         events_stream(spark, sf_dir).where(F.col("event_type") == "click"),
         events_stream(spark, sf_dir).where(F.col("event_type") == "purchase"),
     )
+    documents = load_table(spark, sf_dir, "documents")
     existing_fps = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") % 3 == 0)
+        documents.where(F.col("doc_id") % 3 == 0)
         .select(poly_hash_chars("text").alias("fp"))
         .distinct()
     )
@@ -213,7 +213,7 @@ def stream_dedup_state_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
             (ss, "append"),
             (incr_stream, "complete"),
         ],
-        shuffle_width=stream_shuffle_width(sf_dir, "events", "documents"),
+        shuffle_width=stream_shuffle_width(load_table(spark, sf_dir, "events"), documents),
     )
     dedup_counts = deduped.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")).select(
         F.lit("dedup").alias("kind"),
@@ -270,5 +270,5 @@ def stream_word_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(
         streaming_word_count(documents_stream(spark, sf_dir)),
         "complete",
-        shuffle_width=stream_shuffle_width(sf_dir, "documents"),
+        shuffle_width=stream_shuffle_width(load_table(spark, sf_dir, "documents")),
     )

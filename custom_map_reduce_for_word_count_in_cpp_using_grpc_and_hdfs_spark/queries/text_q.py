@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators import text as T
-from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import spread
+from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import row_count, spread
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries import query
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources import load_table
 
@@ -221,7 +221,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = spread(docs, by=["doc_id"]).select("doc_id", F.explode(tokens_col("text")).alias("word"))
     tf = words.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf"))
     df = tf.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
-    n_docs = docs.count()
+    n_docs = row_count(docs)
     idf_micro = F.round(F.log((F.lit(n_docs) + 1.0) / (F.col("df") + 1.0)) * 1000000).cast("long")
     return (
         tf.join(df.withColumn("idf_micro", idf_micro), "word")

@@ -3,10 +3,11 @@
 The reference is strictly batch (SURVEY.md §2.3) — this is north-star
 surface. Design:
 
-- **Source**: file stream over a staged directory (Spark's file source
-  requires a directory; the driver's events table is a single parquet
-  file, so we stage a copy under ``.scratch/``). In production this is a
-  Kafka/file-drop source; everything downstream is identical.
+- **Source**: file stream over the table's directory (Spark's file
+  source requires one). A directory-layout table is read in place; a
+  single-file table, like the driver's events table, is staged as a
+  copy under ``.scratch/``. In production this is a Kafka/file-drop
+  source; everything downstream is identical.
 - **Windows**: tumbling/sliding via ``window()``, sessions via
   ``session_window()`` — all computed with ``Trigger.AvailableNow`` so a
   bounded run drains the source and terminates, giving batch-equivalent
@@ -37,18 +38,21 @@ from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.functions
 SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".scratch")
 
 
-def _stage_dir(sf_dir: str, table: str = "events") -> str:
-    """Stage ``<sf_dir>/<table>.parquet`` into a directory usable by the
-    file-stream source. Idempotent per (sf_dir, table)."""
+def _stream_dir(sf_dir: str, table: str) -> str:
+    """Directory the file-stream source reads for ``<sf_dir>/<table>.parquet``:
+    the table itself when it is a directory of part files, else a staged
+    copy of the single file. Staging is idempotent per (sf_dir, table)."""
     import hashlib
 
+    source = os.path.join(sf_dir, f"{table}.parquet")
+    if os.path.isdir(source):
+        return source
     # stable digest — Python's hash() is per-process randomized, which
     # would re-stage (and leak) a fresh copy every run
     digest = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
     key = f"{table}-{digest}"
     target = os.path.join(SCRATCH, "streams", key)
     marker = os.path.join(target, f"{table}.parquet")
-    source = os.path.join(sf_dir, f"{table}.parquet")
     # staleness guard: if the source was regenerated since we staged it,
     # re-copy — otherwise a long-lived .scratch dir silently streams last
     # round's data. copy2 preserves the source mtime, so freshness is an
@@ -67,6 +71,13 @@ def _stage_dir(sf_dir: str, table: str = "events") -> str:
     return target
 
 
+def _file_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """File stream over ``<sf_dir>/<table>.parquet`` with the batch
+    table's schema (the file-stream source does not infer one)."""
+    batch_schema = spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet")).schema
+    return spark.readStream.schema(batch_schema).parquet(_stream_dir(sf_dir, table))
+
+
 def events_source(spark: SparkSession, conf: dict | None = None) -> DataFrame:
     """Source seam: build the raw streaming DataFrame for the events
     table from a source-kind config, so a Kafka/rate source slots in
@@ -82,9 +93,7 @@ def events_source(spark: SparkSession, conf: dict | None = None) -> DataFrame:
     conf = conf or {}
     kind = conf.get("kind", "file")
     if kind == "file":
-        sf_dir = conf["sf_dir"]
-        batch_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
-        return spark.readStream.schema(batch_schema).parquet(_stage_dir(sf_dir))
+        return _file_stream(spark, conf["sf_dir"], "events")
     if kind == "rate":
         # Deterministic synthetic events from the built-in rate-micro-batch
         # source (exactly rows_per_batch rows per micro-batch, monotone
@@ -161,9 +170,8 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming DataFrame over the events table (ts normalized to
     microsecond timestamps, same as the batch reader)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    batch_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
     stream = events_source(spark, {"kind": "file", "sf_dir": sf_dir})
-    ts_kind = dict((f.name, f.dataType.simpleString()) for f in batch_schema.fields).get("ts")
+    ts_kind = dict((f.name, f.dataType.simpleString()) for f in stream.schema.fields).get("ts")
     if ts_kind == "bigint":
         stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     elif ts_kind == "timestamp_ntz":
@@ -201,25 +209,24 @@ STREAM_WIDTH_TARGET_BYTES = 64 * 1024 * 1024
 STREAM_WIDTH_FLOOR = 2
 
 
-def stream_shuffle_width(sf_dir: str, *tables: str) -> int | None:
-    """Input-sized streaming shuffle/state width: ceil(total source
-    bytes / STREAM_WIDTH_TARGET_BYTES), floored at STREAM_WIDTH_FLOOR —
-    or ``None`` (leave the session width alone) when a source cannot be
-    sized locally. ``SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS`` overrides
-    the derivation for cluster tuning, mirroring the batch-side
-    SPARK_GRAFT_SHUFFLE_PARTITIONS knob."""
+def stream_shuffle_width(*sources: DataFrame) -> int | None:
+    """Input-sized streaming shuffle/state width for drains over the
+    batch frames ``sources`` (as returned by ``load_table``):
+    ceil(total scan bytes / STREAM_WIDTH_TARGET_BYTES), floored at
+    STREAM_WIDTH_FLOOR — or ``None`` (leave the session width alone)
+    when a source cannot be sized locally. Bytes come from
+    ``plans/parallelism.scan_bytes``, so a directory-layout table is
+    sized by its part files."""
     import math
 
-    env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
-    if env:
-        return int(env)
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import scan_bytes
+
     total = 0
-    for table in tables or ("events",):
-        path = os.path.join(sf_dir, f"{table}.parquet")
-        try:
-            total += os.path.getsize(path)
-        except OSError:
+    for df in sources:
+        nbytes = scan_bytes(df)
+        if nbytes is None:
             return None
+        total += nbytes
     return max(STREAM_WIDTH_FLOOR, math.ceil(total / STREAM_WIDTH_TARGET_BYTES))
 
 
@@ -240,14 +247,15 @@ def run_available_now_many(
     is awaited — independent streaming jobs shouldn't serialize on the
     driver) and return each result as a batch DataFrame.
 
-    Single-batch constraint for oracle-checked drains: the staged file
-    source is exactly ONE file (see _stage_dir), so an AvailableNow drain
-    is one micro-batch and the watermark never advances mid-drain. With a
-    multi-file source the watermark could advance between micro-batches
-    and drop late rows (dropDuplicatesWithinWatermark, stream-stream
-    join), legitimately diverging from the batch oracle — if a staged
-    source ever grows multiple files, pin maxFilesPerTrigger above the
-    file count or use a watermark delay exceeding the event-time span.
+    Single-batch constraint for oracle-checked drains: the watermark
+    must not advance mid-drain, or it could drop late rows
+    (dropDuplicatesWithinWatermark, stream-stream join) and legitimately
+    diverge from the batch oracle. A staged single-file source is one
+    file, and a directory source (see _stream_dir) leaves
+    maxFilesPerTrigger unset, so AvailableNow admits every part file in
+    ONE micro-batch either way. Setting maxFilesPerTrigger below the
+    file count would split the drain; pin it above the file count or use
+    a watermark delay exceeding the event-time span.
 
     ``shuffle_width`` (round 14): the shuffle/state-store partition
     count for the queries STARTED here — streaming reads
@@ -374,8 +382,7 @@ def click_purchase_join(clicks: DataFrame, purchases: DataFrame, horizon: str = 
 def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming source over the documents table (for incremental
     word-count — the reference query as a stream)."""
-    batch_schema = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).schema
-    return spark.readStream.schema(batch_schema).parquet(_stage_dir(sf_dir, "documents"))
+    return _file_stream(spark, sf_dir, "documents")
 
 
 def streaming_word_count(docs: DataFrame) -> DataFrame:

@@ -495,19 +495,19 @@ def test_eager_stats_count_gated_on_source_bytes(spark):
     cross the broadcast threshold. Provably-small local scans keep the
     lazy persist; unsizeable sources (in-memory frames, remote schemes)
     stay eager — the production-safe direction."""
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators.caching import _broadcast_risk
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.operators.caching import _size_proof
 
     docs = load_table(spark, SF_CORRECT, "documents")
     # 65 KB parquet × 32 expansion bound << 64 MB threshold: no risk.
-    assert _broadcast_risk(D.doc_shingles(docs)) is False
+    assert _size_proof(D.doc_shingles(docs))[0] is False
     # In-memory frame: no file listing, size unprovable → eager.
     mem = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    assert _broadcast_risk(D.doc_shingles(mem)) is True
+    assert _size_proof(D.doc_shingles(mem))[0] is True
     # Auto-broadcast disabled: a mis-estimate cannot mis-plan → lazy.
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        assert _broadcast_risk(D.doc_shingles(mem)) is False
+        assert _size_proof(D.doc_shingles(mem))[0] is False
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 

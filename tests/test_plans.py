@@ -7,6 +7,7 @@ operators — so a regression in plan quality fails CI, not just the bench."""
 
 from __future__ import annotations
 
+import os
 import re
 
 from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries import QUERIES
@@ -282,7 +283,11 @@ def test_scan_row_count_exact_and_guarded(spark, tmp_path):
     count() job would return, or fall back to running one."""
     from pyspark.sql import functions as F
 
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import scan_row_count
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.plans.parallelism import (
+        row_count,
+        scan_bytes,
+        scan_row_count,
+    )
 
     path = str(tmp_path / "t")
     spark.range(0, 1234).write.parquet(path)
@@ -294,6 +299,15 @@ def test_scan_row_count_exact_and_guarded(spark, tmp_path):
     assert scan_row_count(df.sample(0.5)) is None
     assert scan_row_count(df.join(df.select(F.col("id").alias("j")), df.id == F.col("j"))) is None
     assert scan_row_count(spark.range(10).toDF("x")) is None
+    # row_count: the footer count where proven, else the count job
+    assert row_count(df) == 1234
+    assert row_count(df.where("id % 2 = 0")) == df.where("id % 2 = 0").count()
+    assert row_count(spark.range(10).toDF("x")) == 10
+    # scan_bytes: a directory is the sum of its part files; no files -> None
+    parts = [os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")]
+    assert len(parts) > 1
+    assert scan_bytes(df) == sum(os.path.getsize(p) for p in parts)
+    assert scan_bytes(spark.range(10).toDF("x")) is None
 
 
 def test_ann_topk_plans_window_group_limit(spark):

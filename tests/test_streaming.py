@@ -696,37 +696,63 @@ def test_streaming_mjpeg_video_ingest(spark, tmp_path):
     assert {tuple(r) for r in out.collect()} == batch_rows
 
 
-def test_stream_shuffle_width_input_sized(tmp_path, monkeypatch):
+def test_stream_shuffle_width_input_sized(spark, dir_layout, monkeypatch):
     """The round-14 input-sized streaming width (VERDICT r13 item 3):
-    ceil(source bytes / 64 MB) floored at 2, env-overridable, and None
-    (leave the session width alone) when a source cannot be sized —
-    the measured 3-decade optimum (sf0.1/sf1/sf10 A/B in
+    ceil(source scan bytes / target) floored at 2, summed over sources,
+    sized by the part files of a directory-layout table, and None (leave
+    the session width alone) when a source cannot be sized — the
+    measured 3-decade optimum (sf0.1/sf1/sf10 A/B in
     tools/r14_stream_width_ab.py: width 2/2/4 vs 2-2.3x slower at the
     pinned 32)."""
-    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.streaming.windows import (
-        STREAM_WIDTH_FLOOR,
-        STREAM_WIDTH_TARGET_BYTES,
-        stream_shuffle_width,
-    )
+    import math
+    from pathlib import Path
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", raising=False)
-    small = tmp_path / "events.parquet"
-    small.write_bytes(b"x" * 1024)
-    assert stream_shuffle_width(str(tmp_path), "events") == STREAM_WIDTH_FLOOR
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources import load_table
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.streaming import windows as W
 
-    # sparse file: logical size drives the width, multiple tables sum
-    big = tmp_path / "documents.parquet"
-    with open(big, "wb") as fh:
-        fh.truncate(3 * STREAM_WIDTH_TARGET_BYTES + 1)
-    assert stream_shuffle_width(str(tmp_path), "documents") == 4
-    assert stream_shuffle_width(str(tmp_path), "events", "documents") == 4
+    from .conftest import SF_CORRECT
+
+    events = load_table(spark, SF_CORRECT, "events")
+    docs = load_table(spark, SF_CORRECT, "documents")
+    assert W.stream_shuffle_width(events) == W.STREAM_WIDTH_FLOOR  # 221 KB << 64 MB
+
+    target = 64 * 1024
+    monkeypatch.setattr(W, "STREAM_WIDTH_TARGET_BYTES", target)
+    ev_bytes = os.path.getsize(os.path.join(SF_CORRECT, "events.parquet"))
+    doc_bytes = os.path.getsize(os.path.join(SF_CORRECT, "documents.parquet"))
+    assert W.stream_shuffle_width(events) == math.ceil(ev_bytes / target)
+    assert W.stream_shuffle_width(events, docs) == math.ceil((ev_bytes + doc_bytes) / target)
+
+    # directory layout: the part files' bytes, not the directory inode's
+    sf_dir = dir_layout("events")
+    part_bytes = sum(p.stat().st_size for p in Path(sf_dir, "events.parquet").glob("part-*.parquet"))
+    expected = max(W.STREAM_WIDTH_FLOOR, math.ceil(part_bytes / target))
+    assert expected > W.STREAM_WIDTH_FLOOR
+    assert W.stream_shuffle_width(load_table(spark, sf_dir, "events")) == expected
 
     # unsizeable source -> None (caller leaves the session width alone)
-    assert stream_shuffle_width(str(tmp_path), "missing") is None
+    assert W.stream_shuffle_width(spark.range(10)) is None
 
-    # explicit cluster override beats the derivation
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "17")
-    assert stream_shuffle_width(str(tmp_path), "events") == 17
+
+@pytest.mark.parametrize(
+    "name, table", [("stream_session_windows", "events"), ("stream_word_count", "documents")]
+)
+def test_streaming_query_directory_layout_matches_single_file(spark, dir_layout, name, table):
+    """A directory-layout source streams in place (no staged copy) and
+    drains to the same rows as the single-file table."""
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.queries import QUERIES
+    from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.streaming.windows import _stream_dir
+
+    from .conftest import SF_CORRECT
+
+    def rows(df):
+        return sorted((tuple(r) for r in df.collect()), key=repr)
+
+    sf_dir = dir_layout(table)
+    assert _stream_dir(sf_dir, table) == os.path.join(sf_dir, f"{table}.parquet")
+    expected = rows(QUERIES[name](spark, SF_CORRECT))
+    assert expected
+    assert rows(QUERIES[name](spark, sf_dir)) == expected
 
 
 def test_run_available_now_many_sets_and_restores_width(spark, tmp_path):

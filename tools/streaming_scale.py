@@ -106,7 +106,7 @@ def stage_skewed_events(spark, sf_dir: str) -> str:
     """Stage a skew fixture: the SF's events with every event_id % 3
     rewritten to one hot user — ~33% of all rows on a single session key.
     One output file so the AvailableNow drain stays a single micro-batch
-    (same watermark discipline as streaming/windows._stage_dir)."""
+    (the single-batch constraint in streaming/windows.run_available_now_many)."""
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.sources import load_table
     from custom_map_reduce_for_word_count_in_cpp_using_grpc_and_hdfs_spark.streaming.windows import SCRATCH
 
